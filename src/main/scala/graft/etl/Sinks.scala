@@ -315,110 +315,6 @@ object Sinks {
       .partitionBy(partitionCol)
       .parquet(tableDir)
 
-  /** Fold all epoch partitions `batch_id < upToExclusive` of a
-    * [[overwritePartitions]]-maintained table into the single BASE
-    * partition `batch_id = -1` — the maintenance pass that keeps a
-    * standing index healthy under an hourly effectively-once loop
-    * (thousands of per-epoch directories otherwise accumulate; small
-    * files and listing cost grow without bound). The base id −1 is
-    * strictly below every real epoch, so readers filtering
-    * `batch_id < current` (the probe's replay contract) see folded
-    * rows unchanged.
-    *
-    * WATERMARK CONTRACT: `upToExclusive` must not exceed the loop's
-    * last CHECKPOINT-COMMITTED epoch + 1 — folding a still-replayable
-    * epoch into the base would put its rows below the replay's
-    * strictly-earlier probe filter (−1 < N), re-pairing the epoch
-    * against itself. Run compaction from the loop's own maintenance
-    * window (e.g. inside foreachBatch between epochs, or with the
-    * stream stopped); a reader that listed files before the epoch
-    * deletes below may need one retry — the fold itself never loses
-    * or duplicates rows.
-    *
-    * Crash-safe by construction, not by locking:
-    *  - the base rewrite is `distinct` over (base ∪ folded epochs)
-    *    minus the partition column, so re-running after ANY crash
-    *    converges to the same base rows;
-    *  - a crash between the base write and the epoch deletes leaves
-    *    rows duplicated between base and the undeleted epochs — the
-    *    state every probe already collapses on its bucket-pruned slice
-    *    (the loops' defense-in-depth distinct), and the next
-    *    compaction run folds it away.
-    * Returns the number of epoch partitions removed. */
-  def compactEpochPartitions(
-      spark: SparkSession, tableDir: String, upToExclusive: Long): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val root = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0L
-    val epochDirs = fs.listStatus(root).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .flatMap { p =>
-        p.getName match {
-          case s if s.startsWith("batch_id=") =>
-            s.stripPrefix("batch_id=").toLongOption
-              .filter(id => id >= 0 && id < upToExclusive).map(p -> _)
-          case _ => None
-        }
-      }
-    if (epochDirs.isEmpty) return 0L
-    val base = spark.read.parquet(tableDir)
-      .filter(col("batch_id") < upToExclusive)
-      .drop("batch_id").distinct()
-      .withColumn("batch_id", lit(-1L))
-      // Pin the folded rows BEFORE the overwrite job: the scan below
-      // reads the same files the write replaces.
-      .localCheckpoint(true)
-    overwritePartitions(base, tableDir, "batch_id")
-    epochDirs.foreach { case (p, _) => fs.delete(p, true) }
-    epochDirs.size.toLong
-  }
-
-  /** One-off migration of a PRE-epoch table directory (flat parquet
-    * files from the old blind-append path) into the batch_id layout:
-    * flat-file rows move into the base partition batch_id = −1, so the
-    * effectively-once loops append/probe the table like any compacted
-    * index. Handles the mixed state a loop crash over a legacy dir
-    * leaves behind (flat files next to new partition dirs): only the
-    * flat files are folded (unioned into any existing base, distinct),
-    * epoch partitions are untouched. Returns true when flat files were
-    * adopted; no-op on an absent or already-partitioned dir.
-    *
-    * Schema note: adoption moves rows, it does not reshape them — a
-    * legacy MEDIA index (un-exploded (item_id, bands) hash rows)
-    * additionally needs the exploded-band-row reshape
-    * ([[graft.mm.MultimodalQueries.mediaBandRows]]) before the new
-    * probe can read it; simplest is to drop that index and let the
-    * loop rebuild it from fingerprints. */
-  def adoptLegacyTable(spark: SparkSession, tableDir: String): Boolean = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val root = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return false
-    val flat = fs.listStatus(root).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath)
-    if (flat.isEmpty) return false
-    val hasBase =
-      fs.exists(new org.apache.hadoop.fs.Path(root, "batch_id=-1"))
-    val flatRows = spark.read.parquet(flat.map(_.toString): _*)
-    val base =
-      (if (hasBase)
-        flatRows.unionByName(
-          spark.read.parquet(s"$tableDir/batch_id=-1"))
-      else flatRows)
-        .distinct()
-        .withColumn("batch_id", lit(-1L))
-        // Pin before the overwrite replaces the files being read.
-        .localCheckpoint(true)
-    overwritePartitions(base.filter(col("batch_id") === -1L), tableDir, "batch_id")
-    flat.foreach(fs.delete(_, false))
-    // Blind-append side artifacts (_SUCCESS of the old layout) are
-    // harmless to partition discovery and left alone.
-    true
-  }
-
   /** `<md5(content)[0:6]>-<yyyy-MM-dd-HH-mm-ss>` — create_random_dt_prefix
     * (bpi_etl_bigquery.py:8-23): md5 over the snapshot *content* spreads
     * object-store keys across the keyspace so request autoscaling never

@@ -7,8 +7,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * over the staging machinery in [[Sinks]]/[[graft.ops.Compaction]]:
   * the thing a 100-TB pipeline owner hits the first time a reader
   * races the compactor. Directory-swap layouts (dynamic partition
-  * overwrite, [[Sinks.compactEpochPartitions]]) replace FILES in
-  * place, so a reader that listed before the swap can read a torn
+  * overwrite, [[Sinks.overwritePartitions]]) replace FILES in place, so a reader that listed before the swap can read a torn
   * mix of old and new files, or hit deleted ones. This format is the
   * public Iceberg/Delta-family fix, reduced to its load-bearing core:
   *
@@ -55,25 +54,16 @@ object SnapshotTable {
   // a plain directory until its first snapshot commit and must not
   // see torn staged files alongside its own.
   private val DataDir = "_data"
-  // Pre-rename staging dir (the format's first rounds staged under a
-  // bare `data/`): manifests written then reference `data/…` paths.
-  // Reads resolve those paths unchanged (manifests carry
-  // table-relative paths), but [[isStagedPath]] and [[expire]] must
-  // keep recognizing the legacy prefix — otherwise legacy staged
-  // partitions misroute through Backfill's attached-value path, and
-  // legacy files referenced only by expired manifests leak forever.
-  private val LegacyDataDir = "data"
   private val Terminator = "commit"
 
   /** Was this manifest entry STAGED by a commit (lives under
-    * [[DataDir]] — or the pre-rename [[LegacyDataDir]] — written from
-    * a caller's frame, so it carries whatever columns that frame had)
+    * [[DataDir]], written from a caller's frame, so it carries whatever columns that frame had)
     * as opposed to ADOPTED in place (a bare top-level name from a
     * pre-format layout, whose files may lack columns the format's
     * writers always carry)? [[graft.etl.Backfill]] routes reads on
     * this distinction. */
   private[etl] def isStagedPath(f: String): Boolean =
-    f.startsWith(s"$DataDir/") || f.startsWith(s"$LegacyDataDir/")
+    f.startsWith(s"$DataDir/")
 
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
@@ -113,10 +103,10 @@ object SnapshotTable {
     //                [[replaceBatch]]);
     //  - `maxBatch=` the table's EPOCH LEDGER as of this snapshot — the
     //                highest batch id ever committed (-1 = none / reset).
-    //                Carried by every post-round-15 commit so epoch
-    //                idempotence survives [[expire]] dropping the old
-    //                batch-stamped manifests and [[compact]]/[[append]]
-    //                publishing batch-less ones.
+    //                Stamped by every commit, so epoch idempotence
+    //                survives [[expire]] dropping the old batch-stamped
+    //                manifests and [[compact]]/[[append]] publishing
+    //                batch-less ones.
     val extra = lines.drop(2).takeWhile(l =>
       l.startsWith("batch=") || l.startsWith("maxBatch="))
     val batch = extra.find(_.startsWith("batch="))
@@ -289,40 +279,21 @@ object SnapshotTable {
     }.sum
   }
 
-  /** The table's EPOCH LEDGER: the highest streaming batch id ever
-    * committed, or -1 if none. Derived from the newest manifest that
-    * carries an explicit `maxBatch=` header (every post-round-15
-    * commit stamps one; [[overwrite]] stamps the -1 RESET), topped up
-    * by any newer legacy `batch=` headers; a fully pre-ledger chain
-    * falls back to the retained batch headers — the old behavior,
-    * with its documented caveat that [[expire]] can forget epochs
-    * until the table's first post-upgrade commit re-stamps the max. */
-  private[etl] def ledgerMax(chain: Seq[Manifest]): Long = {
-    val idx = chain.lastIndexWhere(_.maxBatch.isDefined)
-    if (idx >= 0)
-      (chain(idx).maxBatch.get +: chain.drop(idx + 1).flatMap(_.batchId))
-        .max
-    else chain.flatMap(_.batchId).foldLeft(-1L)(math.max)
-  }
+  /** The table's EPOCH LEDGER as of snapshot `head`: the highest
+    * streaming batch id ever committed, or -1 if none. Every commit
+    * stamps it (`maxBatch=`; [[overwrite]] and [[adopt]] stamp the -1
+    * RESET), so the head manifest alone carries it. */
+  private[graft] def ledgerOf(head: Option[Manifest]): Long =
+    head.flatMap(_.maxBatch).getOrElse(-1L)
 
   /** Public ledger read — the highest batch id committed to this
-    * table (-1 if none): survives [[compact]] folding the epoch files
-    * and [[expire]] dropping the old batch-stamped manifests, so
-    * loop sequencing ([[graft.streaming.IncrementalBars]]'s
-    * high-water mark) never wedges or double-counts after
-    * maintenance. */
+    * table (-1 if none), off the head manifest: survives [[compact]]
+    * folding the epoch files and [[expire]] dropping the old
+    * batch-stamped manifests, so loop sequencing
+    * ([[graft.streaming.EpochLedger]]) never wedges or double-counts
+    * after maintenance. */
   def maxCommittedBatch(spark: SparkSession, tableDir: String): Long =
-    ledgerMax(snapshots(spark, tableDir))
-
-  /** Does this table use the snapshot format at all (a `manifests/`
-    * dir exists, committed or torn)? Distinguishes "snapshot table
-    * whose only commits are torn — readers must see EMPTY, not take a
-    * plain-directory read that chokes on the manifests dir" from a
-    * genuine plain parquet directory. */
-  def isSnapshotFormat(spark: SparkSession, tableDir: String): Boolean = {
-    val fs = fsOf(spark, tableDir)
-    fs.exists(new Path(s"$tableDir/$ManifestDir"))
-  }
+    ledgerOf(currentSnapshot(spark, tableDir))
 
   /** Commit `df` as a new snapshot REPLACING the table contents.
     * Returns the snapshot id.
@@ -356,11 +327,10 @@ object SnapshotTable {
     // appends (same as Iceberg's fast-append without a catalog) —
     // single-writer-per-table is this format's write contract,
     // MULTI-READER isolation is its guarantee.
-    val chain = snapshots(spark, tableDir)
-    val head = chain.lastOption
+    val head = currentSnapshot(spark, tableDir)
     publish(fs, tableDir, head.map(_.files).getOrElse(Nil) ++ staged,
       head.map(_.rows).getOrElse(0L) + added,
-      maxBatch = Some(ledgerMax(chain)))
+      maxBatch = Some(ledgerOf(head)))
   }
 
   /** EFFECTIVELY-ONCE append for streaming epochs — the foreachBatch
@@ -374,33 +344,33 @@ object SnapshotTable {
     * out in [[expire]]); otherwise an ordinary [[append]] commit is
     * published with the batch id in the manifest header.
     *
-    * The replay test is the EPOCH LEDGER (`batchId <= `[[ledgerMax]]),
+    * The replay test is the EPOCH LEDGER (`batchId <= `[[ledgerOf]]),
     * not a scan for a retained `batch=` manifest: streaming epoch ids
     * are monotone per checkpoint, so "at or below the high-water mark"
     * IS "already committed", and the test keeps holding after
     * [[compact]] folds the epoch's files and [[expire]] drops its
     * manifest — where the old manifest scan silently re-appended
     * (double count) or, after an [[overwrite]] ledger reset, silently
-    * no-op'd (dropped the restarted epoch). Ledger lookups read the
-    * same metadata-sized manifest listing every other operation
-    * reads. */
+    * no-op'd (dropped the restarted epoch). The ledger lookup reads
+    * the head manifest only. */
   def appendOnce(df: DataFrame, tableDir: String, batchId: Long): Long = {
     val spark = df.sparkSession
-    val chain = snapshots(spark, tableDir)
-    if (chain.nonEmpty && batchId <= ledgerMax(chain))
+    val head = currentSnapshot(spark, tableDir)
+    if (head.nonEmpty && batchId <= ledgerOf(head)) {
+      val chain = snapshots(spark, tableDir)
       chain.findLast(_.batchId.contains(batchId))
         .getOrElse(chain.last).id // ledger remembers folded/expired epochs
-    else {
+    } else {
       val fs = fsOf(spark, tableDir)
       val staged = stage(df, fs, tableDir, s"b$batchId")
       val added = stagedRows(spark, tableDir, staged)
       // Head re-resolved after staging, same as append(): the publish
       // retry loop is the only concurrency window under the
       // single-writer-per-table contract.
-      val head = currentSnapshot(spark, tableDir)
-      publish(fs, tableDir, head.map(_.files).getOrElse(Nil) ++ staged,
-        head.map(_.rows).getOrElse(0L) + added, Some(batchId),
-        maxBatch = Some(math.max(ledgerMax(chain), batchId)))
+      val now = currentSnapshot(spark, tableDir)
+      publish(fs, tableDir, now.map(_.files).getOrElse(Nil) ++ staged,
+        now.map(_.rows).getOrElse(0L) + added, Some(batchId),
+        maxBatch = Some(batchId))
     }
   }
 
@@ -412,7 +382,7 @@ object SnapshotTable {
     * `c` tag), which is exactly when replaceBatch takes its row-level
     * fallback. */
   private[etl] def isBatchFile(f: String, batchId: Long): Boolean = {
-    val name = f.stripPrefix(s"$DataDir/").stripPrefix(s"$LegacyDataDir/")
+    val name = f.stripPrefix(s"$DataDir/")
     name.startsWith(s"b$batchId-") || name.startsWith(s"r$batchId-")
   }
 
@@ -437,33 +407,25 @@ object SnapshotTable {
   def replaceBatch(df: DataFrame, tableDir: String, batchId: Long): Long = {
     val spark = df.sparkSession
     val fs = fsOf(spark, tableDir)
-    val chain = snapshots(spark, tableDir)
-    // The epoch is "landed" if the LEDGER has reached it (survives
-    // compact/expire), a retained manifest carries its header
-    // (pre-ledger chains), or the head still holds its stage-tagged
-    // files (pre-ledger chain whose batch manifest expired — the
-    // file names outlive the manifests, and the swap stays
-    // well-defined).
-    val head = chain.lastOption
-    val owned = head.map(_.files.filter(isBatchFile(_, batchId)))
-      .getOrElse(Nil)
-    require(chain.nonEmpty &&
-      (batchId <= ledgerMax(chain) ||
-        chain.exists(_.batchId.contains(batchId)) || owned.nonEmpty),
+    // The epoch is "landed" iff the LEDGER has reached it (survives
+    // compact/expire).
+    val head = currentSnapshot(spark, tableDir)
+    require(head.nonEmpty && batchId <= ledgerOf(head),
       s"no committed snapshot of $tableDir carries batch $batchId — " +
         "replaceBatch corrects a landed epoch; use appendOnce to land it")
-    val newMax = Some(math.max(ledgerMax(chain), batchId))
+    val h = head.get
+    val owned = h.files.filter(isBatchFile(_, batchId))
+    val newMax = Some(ledgerOf(head))
     val staged = stage(df, fs, tableDir, s"r$batchId")
     val added = stagedRows(spark, tableDir, staged)
     if (owned.nonEmpty) {
       val removed = stagedRows(spark, tableDir, owned)
-      publish(fs, tableDir, head.get.files.filterNot(owned.toSet) ++ staged,
-        head.get.rows - removed + added, Some(batchId), newMax)
+      publish(fs, tableDir, h.files.filterNot(owned.toSet) ++ staged,
+        h.rows - removed + added, Some(batchId), newMax)
     } else {
       // No live file carries the epoch's tag: either the epoch landed
       // empty (nothing to remove — plain append) or a compaction
       // folded its rows into untagged files (row-level fallback).
-      val h = head.get
       val live =
         if (h.files.isEmpty) None
         else Some(read(spark, tableDir, Some(h.id)))
@@ -497,8 +459,7 @@ object SnapshotTable {
     * snapshot id. */
   def compact(
       spark: SparkSession, tableDir: String, numFiles: Int = 1): Long = {
-    val chain = snapshots(spark, tableDir)
-    val head = chain.lastOption.getOrElse(
+    val head = currentSnapshot(spark, tableDir).getOrElse(
       throw new IllegalArgumentException(
         s"$tableDir has no committed snapshot to compact"))
     val rows = read(spark, tableDir, Some(head.id)).repartition(numFiles)
@@ -508,7 +469,7 @@ object SnapshotTable {
     // which epochs it already holds — the forgotten-ledger state
     // double-counted replays and wedged the high-water sequencing.
     publish(fs, tableDir, stage(rows, fs, tableDir, "c"), head.rows,
-      maxBatch = Some(ledgerMax(chain)))
+      maxBatch = Some(ledgerOf(Some(head))))
   }
 
   /** ROW-LEVEL maintenance rewrite: publish one snapshot whose data is
@@ -524,14 +485,14 @@ object SnapshotTable {
     * [[replaceBatch]]'s folded-layout fallback keeps working. */
   def rewrite(df: DataFrame, tableDir: String): Long = {
     val spark = df.sparkSession
-    val chain = snapshots(spark, tableDir)
-    require(chain.nonEmpty,
+    val head = currentSnapshot(spark, tableDir)
+    require(head.nonEmpty,
       s"$tableDir has no committed snapshot to rewrite")
     val fs = fsOf(spark, tableDir)
     val staged = stage(df, fs, tableDir, "m")
     val added = stagedRows(spark, tableDir, staged)
     publish(fs, tableDir, staged, added,
-      maxBatch = Some(ledgerMax(chain)))
+      maxBatch = Some(ledgerOf(head)))
   }
 
   /** Adopt an existing plain parquet directory table (the
@@ -603,18 +564,14 @@ object SnapshotTable {
       .filter(id => !keptIds(id) && id < floorId)
       .map { id => fs.delete(manifestPath(tableDir, id), false); 1L }
       .sum
-    // Both staging prefixes swept: tables written before the
-    // data → _data rename hold staged files under the legacy name,
-    // referenced only by manifests this GC may be expiring.
-    val staged = Seq(DataDir, LegacyDataDir).map { d =>
-      val dataDir = new Path(s"$tableDir/$d")
+    val dataDir = new Path(s"$tableDir/$DataDir")
+    val staged =
       if (!fs.exists(dataDir)) 0L
       else fs.listStatus(dataDir).toSeq.map { s =>
-        val rel = s"$d/${s.getPath.getName}"
+        val rel = s"$DataDir/${s.getPath.getName}"
         if (keptFiles(rel) || s.getModificationTime > cutoff) 0L
         else { fs.delete(s.getPath, true); 1L }
       }.sum
-    }.sum
     // Adopted files live at top level under their bare names — sweep
     // the ones no kept manifest references, same rules as data/.
     val adopted = fs.listStatus(new Path(tableDir)).toSeq

@@ -29,7 +29,7 @@ import graft.ops.Checkpoints.CheckpointOps
   *      read folds per-generation top-K exactly like the batch build's
   *      union of per-stage top-K graphs) and the batch's bucket rows,
   *      both as SnapshotTable commits under the loop discipline:
-  *      epoch-gap refusal on both ledgers, replays no-op (appendOnce),
+  *      epoch-gap refusal ([[EpochLedger]]), replays no-op (appendOnce),
   *      maintenance folds freely because both tables are mergeable.
   *
   * The standing READ ([[standingLayered]]) rebuilds nothing: layer 0
@@ -61,16 +61,7 @@ object IncrementalAnn {
     val spark = vecs.sparkSession
     val index = IncrementalDedup.SnapIndex(indexDir)
     IncrementalDedup.requireEpochContinuity(index, spark, batchId)
-    val next =
-      graft.etl.SnapshotTable.maxCommittedBatch(spark, candsDir) + 1
-    require(batchId <= next,
-      s"epoch gap on the candidate ledger: batch $batchId after " +
-        s"high-water mark ${next - 1}")
-    // One action covers both the empty-batch shortcut and the ripple
-    // gate's batch size (was an isEmpty job PLUS a count job per
-    // epoch — guide §1.2, don't pay two passes for one fact).
-    val batchN = vecs.count()
-    if (batchN == 0L) return
+    EpochLedger.admit(spark, batchId, candsDir)
     // Phase labels (guide §1.5): every job this epoch launches carries
     // its phase in the UI / listeners, so a slow epoch is attributable
     // to probe vs descent vs landing without a debugger. ATTRIBUTION
@@ -79,12 +70,25 @@ object IncrementalAnn {
     // inside the NEXT consumer's first job — AQE still materializes
     // each cut's shuffle/broadcast stages under the label that built
     // them, so per-phase job totals are right to within one stage.
-    // try/finally below keeps an epoch failure from leaking the label
-    // onto the caller's unrelated jobs.
-    def mark(s: String): Unit =
-      spark.sparkContext.setJobDescription(s"ann epoch $batchId: $s")
-    try {
-    mark("probe")
+    // The caller's own label comes back when the epoch ends or fails.
+    EpochLedger.labelled(spark, s"ann epoch $batchId") { mark =>
+      mark("probe")
+      // One action covers both the empty-batch shortcut and the ripple
+      // gate's batch size (was an isEmpty job PLUS a count job per
+      // epoch — guide §1.2, don't pay two passes for one fact).
+      val batchN = vecs.count()
+      if (batchN > 0L)
+        landEpoch(vecs, index, candsDir, batchId, tombsDir, batchN, mark)
+    }
+  }
+
+  /** The non-empty epoch body of [[processBatch]], run under its
+    * labels: `mark` switches the phase. */
+  private def landEpoch(
+      vecs: DataFrame, index: IncrementalDedup.SnapIndex, candsDir: String,
+      batchId: Long, tombsDir: Option[String], batchN: Long,
+      mark: String => Unit): Unit = {
+    val spark = vecs.sparkSession
     val tombs = tombsDir.map(tombstonedIds(spark, _))
     def antiTombs(df: DataFrame, key: String): DataFrame =
       tombs.fold(df)(t => df.join(broadcast(t.withColumnRenamed(
@@ -173,14 +177,12 @@ object IncrementalAnn {
       val sources =
         if (!useRipple) None
         else {
-          // 3-hop ripple in ONE materialization (r19: was a cut plus
-          // TWO broadcast probes per hop — nine-plus scheduling-floor
-          // jobs per round for metadata-sized frontiers). One directed
-          // adjacency covers both edge orientations, so each hop is a
-          // single frontier semi-probe; the hops stay inside one plan
-          // (exchange reuse dedupes the repeated frontier subtrees)
-          // and cut once at the end. Same fixpoint: neighbors-of-
-          // frontier along directed rows ≡ out ∪ in along undirected.
+          // 3-hop ripple. One directed adjacency covers both edge
+          // orientations, so each hop is a single broadcast-frontier
+          // semi-probe; each hop's frontier is cut lazily and
+          // materializes inside the next hop's broadcast. Same
+          // fixpoint: neighbors-of-frontier along directed rows ≡
+          // out ∪ in along undirected.
           val allDir = all.select(col("vec_id"), col("nbr_id"))
             .unionByName(all.select(col("nbr_id").as("vec_id"),
               col("vec_id").as("nbr_id")))
@@ -261,7 +263,6 @@ object IncrementalAnn {
     mark("land")
     IncrementalDedup.landPairs(newEdges, candsDir, batchId)
     index.append(newRows, batchId)
-    } finally spark.sparkContext.setJobDescription(null)
   }
 
   /** One embedding row per vector off the standing index: the index
@@ -421,11 +422,7 @@ object IncrementalAnn {
       retracted: DataFrame, indexDir: String, candsDir: String,
       tombsDir: String, batchId: Long): Unit = {
     val spark = retracted.sparkSession
-    val next =
-      graft.etl.SnapshotTable.maxCommittedBatch(spark, candsDir) + 1
-    require(batchId <= next,
-      s"epoch gap on the candidate ledger: batch $batchId after " +
-        s"high-water mark ${next - 1}")
+    EpochLedger.admit(spark, batchId, candsDir)
     if (retracted.isEmpty) return
     val rIds = retracted.select(col("vec_id")).distinct().cut(false)
     graft.etl.SnapshotTable.appendOnce(

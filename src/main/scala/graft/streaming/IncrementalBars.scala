@@ -20,9 +20,8 @@ import graft.etl.SnapshotTable
   * correction is an atomic manifest swap, so a reader racing either
   * keeps its pinned snapshot, a crashed half-commit is invisible until
   * its replay, and replays of the same batch id no-op off the manifest
-  * ledger. Out-of-order epochs (a gap) are refused — the same
-  * continuity discipline as the dedup loops, minus the standing-index
-  * probe this loop doesn't need.
+  * ledger. Out-of-order epochs (a gap) are refused by the shared
+  * [[EpochLedger]] admission every standing loop runs.
   */
 object IncrementalBars {
 
@@ -46,42 +45,13 @@ object IncrementalBars {
         min(col("cents")).as("low_cents"),
         count(lit(1)).as("n_trades"))
 
-  /** The epoch high-water mark, read off the manifest ledger
-    * ([[SnapshotTable.maxCommittedBatch]] — carried forward by every
-    * commit including compact, so maintenance cannot wedge the
-    * sequence or forget a landed epoch): -1 when nothing committed.
-    * A crashed half-commit of epoch N leaves the mark at N−1 and
-    * forces N's replay before N+1 can land (the reader-side
-    * torn-manifest skip does the hiding; this does the sequencing). */
-  private def highWater(
-      spark: org.apache.spark.sql.SparkSession, barsDir: String): Long =
-    SnapshotTable.maxCommittedBatch(spark, barsDir)
-
-  /** A bars state dir written by the pre-snapshot layout (epoch=N
-    * directories) must refuse loudly, not read as empty: treating it
-    * as a fresh table would restart the epoch sequence over invisible
-    * history. Migration: replay each legacy epoch through
-    * [[processBatch]] into a fresh dir (partials are derived state),
-    * or appendOnce each epoch's rows directly. */
-  private def requireNotLegacy(
-      spark: org.apache.spark.sql.SparkSession, barsDir: String): Unit =
-    if (SnapshotTable.currentSnapshot(spark, barsDir).isEmpty &&
-        IncrementalDedup.hasLegacyContent(spark, barsDir))
-      throw new IllegalStateException(
-        s"$barsDir holds the pre-snapshot epoch=N directory layout: " +
-          "replay its epochs into a fresh snapshot-committed dir " +
-          "(partial bars are derived state) before continuing the loop.")
-
   /** Land one epoch's partial bars as a snapshot commit. Effectively
     * once per batch id (manifest ledger); refuses a batch id that
-    * would leave an epoch gap. */
+    * would leave an epoch gap. A crashed half-commit of epoch N leaves
+    * the mark at N−1 and forces N's replay before N+1 can land. */
   private[graft] def processBatch(
       trades: DataFrame, barsDir: String, batchId: Long): Unit = {
-    val spark = trades.sparkSession
-    requireNotLegacy(spark, barsDir)
-    val next = highWater(spark, barsDir) + 1
-    require(batchId <= next,
-      s"epoch gap: batch $batchId after high-water mark ${next - 1}")
+    EpochLedger.admit(trades.sparkSession, batchId, barsDir)
     // Empty batches COMMIT an empty epoch (zero partial-bar rows, a
     // real batch-stamped manifest): skipping them would never advance
     // the high-water mark, wedging the sequence — every later batch id
@@ -119,7 +89,7 @@ object IncrementalBars {
   private[graft] def reopen(
       trades: DataFrame, barsDir: String, epoch: Long): Unit = {
     val spark = trades.sparkSession
-    require(epoch >= 0 && epoch <= highWater(spark, barsDir),
+    require(epoch >= 0 && epoch <= EpochLedger.highWater(spark, barsDir),
       s"epoch $epoch is not committed under $barsDir — a late-trade " +
         "reopen corrects a landed epoch; use processBatch to land new ones")
     SnapshotTable.replaceBatch(
@@ -134,7 +104,6 @@ object IncrementalBars {
     * underneath cannot change or tear an already-resolved plan. */
   private[graft] def bars(spark: org.apache.spark.sql.SparkSession,
       barsDir: String): DataFrame = {
-    requireNotLegacy(spark, barsDir)
     require(SnapshotTable.currentSnapshot(spark, barsDir).nonEmpty,
       s"no committed epochs under $barsDir")
     SnapshotTable.read(spark, barsDir)

@@ -70,23 +70,15 @@ object IncrementalCuration {
       countsDir: String, dverDir: String, batchId: Long,
       tombsDir: Option[String] = None): Unit = {
     val spark = docs.sparkSession
-    // The three state ledgers advance together (the quality-loop
-    // lockstep discipline): refuse gaps and split-brain resumes.
-    val nexts = Seq(urlsDir, a5Dir, funnelDir)
-      .map(d => SnapshotTable.maxCommittedBatch(spark, d) + 1)
-    require(nexts.max - nexts.min <= 1,
-      s"curation ledgers out of lockstep (next epochs $nexts) — the " +
-        "triple must only ever be advanced through processBatch")
-    require(batchId <= nexts.min,
-      s"epoch gap: batch $batchId after high-water mark ${nexts.min - 1}")
+    // The three state ledgers advance together, in landing order:
+    // refuse gaps and split-brain resumes.
+    EpochLedger.admit(spark, batchId, urlsDir, a5Dir, funnelDir)
     if (docs.isEmpty) return
     // Phase labels (guide §1.5) + lazy cuts (r19): the narrow-flags
     // pass is the epoch's one corpus-scale scan — cutting it lazily
     // materializes it inside its first consumer instead of a
     // standalone job (same single pass, one fewer job launch).
-    def mark(s: String): Unit = spark.sparkContext
-      .setJobDescription(s"curation epoch $batchId: $s")
-    try {
+    EpochLedger.labelled(spark, s"curation epoch $batchId") { mark =>
     mark("gates")
     val nf = CurationQueries.narrowFlags(docs).cut(false)
     // Stage 1: first-seen-wins against the standing URL table, min-doc
@@ -148,7 +140,7 @@ object IncrementalCuration {
     SnapshotTable.appendOnce(
       partial.withColumn("batch_id", lit(batchId)),
       funnelDir, batchId): Unit
-    } finally spark.sparkContext.setJobDescription(null)
+    }
   }
 
   /** Doc tombstones landed so far (empty frame when none). */
@@ -193,7 +185,8 @@ object IncrementalCuration {
     *    under this epoch; the retracted docs' a5 rows are masked at
     *    read by the tombstones;
     *  - urls whose every live holder retracted get a URL tombstone
-    *    (`tombsDir/urls`) so a future re-crawl is first-seen again;
+    *    (`tombsDir/urls`, landed right after the doc tombstones and
+    *    before the triple) so a future re-crawl is first-seen again;
     *    the urls ledger advances with an empty partial to keep the
     *    triple in lockstep.
     *
@@ -206,14 +199,7 @@ object IncrementalCuration {
       countsDir: String, dverDir: String, tombsDir: String,
       batchId: Long): Unit = {
     val spark = retracted.sparkSession
-    val nexts = Seq(urlsDir, a5Dir, funnelDir)
-      .map(d => SnapshotTable.maxCommittedBatch(spark, d) + 1)
-    require(nexts.max - nexts.min <= 1,
-      s"curation ledgers out of lockstep (next epochs $nexts) — the " +
-        "triple must only ever be advanced through processBatch/" +
-        "processRetractions")
-    require(batchId <= nexts.min,
-      s"epoch gap: batch $batchId after high-water mark ${nexts.min - 1}")
+    EpochLedger.admit(spark, batchId, urlsDir, a5Dir, funnelDir)
     if (retracted.isEmpty) return
     val nfR = CurationQueries.narrowFlags(retracted).cut()
     SnapshotTable.appendOnce(
@@ -290,6 +276,17 @@ object IncrementalCuration {
       coalesce(sum(col("sign") * col("f_url") * col("f_html")
         * col("f_lang") * col("f_qual") * col("f_dom")), lit(0L))
         .as("n5"))
+    // URL tombstones for fully-dead urls (no surviving holder) — facts,
+    // landed before the triple like the doc tombstones, so a crash
+    // anywhere after them still forces the epoch's replay.
+    val deadUrls = urlState.filter(col("min_after").isNull)
+      .join(broadcast(nfR.select(col("canonical_url"), col("doc_id")
+        .as("min_before"))), Seq("canonical_url", "min_before"),
+        "left_semi")
+      .select(col("canonical_url"))
+    SnapshotTable.appendOnce(
+      deadUrls.withColumn("batch_id", lit(batchId)),
+      s"$tombsDir/urls", batchId): Unit
     // Land in the triple's lockstep order: urls (empty partial — the
     // probe needs no new minima, survivors' old partials stay live),
     // a5 (promoted survivors), funnel (the correction row).
@@ -305,15 +302,6 @@ object IncrementalCuration {
     SnapshotTable.appendOnce(
       partial.withColumn("batch_id", lit(batchId)),
       funnelDir, batchId): Unit
-    // URL tombstones for fully-dead urls (no surviving holder).
-    val deadUrls = urlState.filter(col("min_after").isNull)
-      .join(broadcast(nfR.select(col("canonical_url"), col("doc_id")
-        .as("min_before"))), Seq("canonical_url", "min_before"),
-        "left_semi")
-      .select(col("canonical_url"))
-    SnapshotTable.appendOnce(
-      deadUrls.withColumn("batch_id", lit(batchId)),
-      s"$tombsDir/urls", batchId): Unit
   }
 
   /** The standing CURATED SURVIVORS — stage-6 fold at read: landed

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.dedup.DedupQueries
 import graft.ops.Checkpoints.CheckpointOps
-import graft.etl.Sinks
 
 /** Streaming twin of the `dedup_incremental` batch query: the day-N+1
   * loop run continuously. Each micro-batch of new documents is
@@ -32,11 +31,9 @@ import graft.etl.Sinks
   * manifest ledger makes an epoch replay (crash anywhere between the
   * first write and the checkpoint commit) a no-op, a reader racing
   * the append keeps its pinned snapshot, and a crashed half-commit is
-  * invisible until its replay. The legacy [[DirIndex]] layout keeps
-  * its dynamic-partition-overwrite contract (replays REWRITE their
-  * own batch_id partitions); the bucketed layout cannot
-  * partition-overwrite (bucketBy and insertInto don't compose), so it
-  * guards with a batch_id existence check instead. In every layout
+  * invisible until its replay. The bucketed layout cannot commit a
+  * manifest (it appends through the catalog), so it guards with a
+  * batch_id existence check instead. In every layout
   * the probe still collapses duplicate standing rows on the
   * bucket-pruned slice BEFORE cap ranking
   * ([[DedupQueries.incrementalPairsBetween]]) as defense in depth, so
@@ -48,8 +45,9 @@ object IncrementalDedup {
   /** Storage abstraction for the STANDING band index — where the
     * streaming loop's state actually lives. Two layouts:
     *
-    *  - [[DirIndex]]: plain parquet appends. The probe's rank window
-    *    re-shuffles the bucket-pruned slice on (band, bh) every batch.
+    *  - [[SnapIndex]]: snapshot-committed epochs. The probe's rank
+    *    window re-shuffles the bucket-pruned slice on (band, bh) every
+    *    batch.
     *  - [[BucketedIndex]]: a managed table bucketed on `bh`
     *    ([[graft.ops.Bucketing.appendBucketed]]). Because
     *    HashPartitioning(bh) satisfies every (band, bh)-clustered
@@ -124,71 +122,20 @@ object IncrementalDedup {
     * small epoch files, `expire` GCs past the reader-grace window.
     * The [[BucketedIndex]] remains the zero-Exchange probe layout at
     * warehouse scale; this layout's probe re-shuffles the
-    * bucket-pruned collision slice like [[DirIndex]]'s. */
+    * bucket-pruned collision slice. */
   final case class SnapIndex(dir: String) extends BandIndex {
     import graft.etl.SnapshotTable
-    /** A populated non-snapshot state dir must REFUSE, not read as
-      * absent: treating a legacy [[DirIndex]] layout as an empty index
-      * would silently skip the standing probe forever (the recall
-      * loss the sem loop's multi-table guard exists to prevent). */
-    private def requireNotLegacy(
-        spark: org.apache.spark.sql.SparkSession): Unit = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) {
-        val legacy = fs.listStatus(p).exists { s =>
-          (s.isFile && s.getPath.getName.endsWith(".parquet")) ||
-            (s.isDirectory && s.getPath.getName.contains("="))
-        }
-        if (legacy)
-          throw new IllegalStateException(
-            s"$dir holds a directory-layout standing index (flat or " +
-              "batch_id= partitioned) but no snapshot commit: keep " +
-              "driving it through DirIndex, or rebuild it into a fresh " +
-              "SnapIndex dir (read the legacy index, appendOnce as one " +
-              "base epoch, point the loop at the new dir).")
-      }
-    }
+    /** A populated dir without a snapshot commit REFUSES rather than
+      * reading as absent, which would silently skip the standing probe
+      * forever ([[EpochLedger.requireSnapshotLayout]]). */
     def exists(spark: org.apache.spark.sql.SparkSession): Boolean =
       if (SnapshotTable.currentSnapshot(spark, dir).nonEmpty) true
-      else { requireNotLegacy(spark); false }
+      else { EpochLedger.requireSnapshotLayout(spark, dir); false }
     def read(spark: org.apache.spark.sql.SparkSession): DataFrame =
       SnapshotTable.read(spark, dir)
     def append(bands: DataFrame, batchId: Long): Unit = {
       SnapshotTable.appendOnce(
         bands.withColumn("batch_id", lit(batchId)), dir, batchId): Unit
-    }
-    def owner(spark: org.apache.spark.sql.SparkSession): Option[String] =
-      OwnerMarker.read(spark, dir)
-    def writeOwner(
-        spark: org.apache.spark.sql.SparkSession, id: String): Unit =
-      OwnerMarker.write(spark, dir, id)
-  }
-
-  /** Maintenance note: under an hourly loop the per-epoch partitions
-    * accumulate; fold old epochs into the base partition periodically
-    * with [[graft.etl.Sinks.compactEpochPartitions]] (base id −1 stays
-    * below every real epoch, so [[committedBefore]] reads folded rows
-    * unchanged). Applies to this index layout and the pairs table. */
-  final case class DirIndex(dir: String) extends BandIndex {
-    def exists(spark: org.apache.spark.sql.SparkSession): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
-    def read(spark: org.apache.spark.sql.SparkSession): DataFrame =
-      spark.read.parquet(dir)
-    /** Auto-adopts a LEGACY FLAT layout first: pre-epoch indexes hold
-      * bare .parquet files at the dir root, and writing batch_id=N
-      * subdirs next to them would poison partition discovery for every
-      * later read ("conflicting directory structures" one epoch after
-      * the upgrade). [[Sinks.adoptLegacyTable]] folds the flat files
-      * into the batch_id=-1 base partition (a no-op costing one
-      * listStatus on an already-partitioned index), so an upgraded
-      * loop keeps its standing state instead of breaking on it. */
-    def append(bands: DataFrame, batchId: Long): Unit = {
-      Sinks.adoptLegacyTable(bands.sparkSession, dir)
-      Sinks.overwritePartitions(
-        bands.withColumn("batch_id", lit(batchId)), dir, "batch_id")
     }
     def owner(spark: org.apache.spark.sql.SparkSession): Option[String] =
       OwnerMarker.read(spark, dir)
@@ -260,47 +207,23 @@ object IncrementalDedup {
     }
   }
 
-  /** Land one epoch's emitted pairs — shared by the three loops.
-    * Fresh (and snapshot) pair tables commit through
-    * [[graft.etl.SnapshotTable.appendOnce]]: atomic manifest swap, a
-    * racing components/survivors consumer keeps its pinned snapshot,
-    * and epoch replays no-op off the manifest ledger. A LEGACY pair
-    * table (batch_id= partition dirs from the pre-snapshot layout,
-    * detected by content without a committed snapshot) keeps landing
-    * through the dynamic-partition-overwrite contract it was built
-    * with — mixing the two layouts in one dir would hide one of them
-    * from the consumer, so the dir's first landing fixes its format.
-    * Maintenance: snapshot pair tables fold/GC via
-    * `SnapshotTable.compact`/`expire`; legacy ones via
-    * [[graft.etl.Sinks.compactEpochPartitions]]. */
+  /** Land one epoch's emitted pairs — shared by the pair loops — as a
+    * [[graft.etl.SnapshotTable.appendOnce]] commit: atomic manifest
+    * swap, a racing components/survivors consumer keeps its pinned
+    * snapshot, and epoch replays no-op off the manifest ledger.
+    * Maintenance folds/GCs via `SnapshotTable.compact`/`expire`. */
   private[streaming] def landPairs(
-      pairs: DataFrame, pairsDir: String, batchId: Long): Unit = {
-    val spark = pairs.sparkSession
-    val stamped = pairs.withColumn("batch_id", lit(batchId))
-    if (graft.etl.SnapshotTable.currentSnapshot(spark, pairsDir).isEmpty &&
-        hasLegacyContent(spark, pairsDir))
-      Sinks.overwritePartitions(stamped, pairsDir, "batch_id")
-    else
-      graft.etl.SnapshotTable.appendOnce(stamped, pairsDir, batchId): Unit
-  }
-
-  private[streaming] def hasLegacyContent(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists { s =>
-      (s.isFile && s.getPath.getName.endsWith(".parquet")) ||
-        (s.isDirectory && s.getPath.getName.contains("="))
-    }
-  }
+      pairs: DataFrame, pairsDir: String, batchId: Long): Unit =
+    graft.etl.SnapshotTable.appendOnce(
+      pairs.withColumn("batch_id", lit(batchId)), pairsDir, batchId): Unit
 
   /** One micro-batch step: probe, emit pairs, grow the index.
     * Exposed for specs; [[start]] wires it behind a checkpoint,
     * passing the epoch id that makes replays idempotent. The
     * String-dir overloads drive the [[SnapIndex]] snapshot layout
     * (round 14 — the landing conventions unified on SnapshotTable
-    * commits); construct a [[DirIndex]]/[[BucketedIndex]] explicitly
-    * for the directory or zero-Exchange bucketed layouts. */
+    * commits); construct a [[BucketedIndex]] explicitly for the
+    * zero-Exchange bucketed layout. */
   private[graft] def processBatch(
       docs: DataFrame, indexDir: String, pairsDir: String,
       batchId: Long): Unit =
@@ -360,32 +283,27 @@ object IncrementalDedup {
     PairConsumers.survivorsOf(
       corpus, pairsDir, "new_doc", "corpus_doc", "doc_id", retracted)
 
-  /** Refuses epoch-id recycling — the one ops move that would make the
-    * partition-overwrite contract DESTRUCTIVE: foreachBatch ids are
+  /** Refuses epoch-id recycling: foreachBatch ids are
     * checkpoint-scoped, so pointing a loop with a fresh (or reset)
-    * checkpoint at an existing index restarts ids at 0 and each new
-    * epoch would silently overwrite the old epoch's partition while
-    * the probe (batch_id < 0) sees an empty standing state. Detected
+    * checkpoint at an existing index restarts ids at 0 — each recycled
+    * epoch would no-op as a replay off the old ledger while the probe
+    * (batch_id < 0) sees an empty standing state. Detected
     * exactly at the fresh-checkpoint signature — batch 0 over an index
     * already holding epochs > 0, OR over an index whose persisted
     * owner marker names a DIFFERENT checkpoint (the marker closes the
     * blind spot where the prior run only ever committed epoch 0, which
     * the epoch scan alone cannot tell apart from a legitimate epoch-0
     * replay). Steady path pays nothing — both probes run at batch 0
-    * only. Residual blind spot: a pre-marker index holding only epoch
-    * 0 under a fresh checkpoint still looks like a replay; the first
-    * batch of any marker-aware run stamps ownership, so the window is
-    * exactly one legacy-index upgrade. Recovery: fold the old epochs
-    * into the base partition ([[graft.etl.Sinks.compactEpochPartitions]]
-    * with upToExclusive > max epoch) — base rows live at batch_id = −1,
-    * below every new epoch, so both the probe and new appends compose
-    * correctly — then delete/rewrite the `_graft_owner` marker. On the
-    * snapshot layout the fold is one
-    * [[graft.etl.SnapshotTable.overwrite]] of EACH state table (index
-    * and pairs) rewritten to batch_id = −1: overwrite resets the
-    * manifest epoch ledger, so the restarted sequence's recycled ids
-    * land as new epochs instead of silently no-op'ing as replays (the
-    * recall-loss failure the guard exists to prevent). */
+    * only. Residual blind spot: an index without a marker holding only
+    * epoch 0 under a fresh checkpoint still looks like a replay; the
+    * first batch of any run given an owner id stamps ownership.
+    * Recovery: one [[graft.etl.SnapshotTable.overwrite]] of EACH state
+    * table (index and pairs) rewritten to batch_id = −1 — base rows sit
+    * below every new epoch, so both the probe and new appends compose,
+    * and overwrite resets the manifest epoch ledger, so the restarted
+    * sequence's recycled ids land as new epochs instead of silently
+    * no-op'ing as replays (the recall-loss failure the guard exists to
+    * prevent) — then delete/rewrite the `_graft_owner` marker. */
   private[streaming] def requireEpochContinuity(
       index: BandIndex, spark: org.apache.spark.sql.SparkSession,
       batchId: Long, ownerId: Option[String] = None): Unit =
@@ -393,20 +311,20 @@ object IncrementalDedup {
       for (o <- ownerId; m <- index.owner(spark); if m != o)
         throw new IllegalStateException(
           s"fresh checkpoint '$o' over a standing index owned by " +
-            s"checkpoint '$m': recycled batch ids would overwrite the " +
-            "prior run's epochs. Fold the index (and pairs table) into " +
-            "the base partition (Sinks.compactEpochPartitions) and " +
-            "remove the _graft_owner marker to transfer ownership.")
+            s"checkpoint '$m': recycled batch ids would collide with the " +
+            "prior run's epochs. Fold the index AND its pairs table to " +
+            "the base epoch (SnapshotTable.overwrite(read(dir)" +
+            ".withColumn(\"batch_id\", lit(-1L)), dir) on both dirs) " +
+            "and remove the _graft_owner marker to transfer ownership.")
       val stored = index.read(spark)
       if (stored.columns.contains("batch_id") &&
         !stored.filter(col("batch_id") > 0).isEmpty)
         throw new IllegalStateException(
           "fresh checkpoint over a standing index with epochs > 0: " +
-            "recycled batch ids would overwrite prior epochs and hide " +
-            "the index from the probe. Fold the index AND its pairs " +
-            "table to the base epoch first — directory layout: " +
-            "Sinks.compactEpochPartitions(spark, dir, maxEpoch + 1); " +
-            "snapshot layout: SnapshotTable.overwrite(read(dir)" +
+            "recycled batch ids would collide with prior epochs and " +
+            "hide the index from the probe. Fold the index AND its " +
+            "pairs table to the base epoch first: " +
+            "SnapshotTable.overwrite(read(dir)" +
             ".withColumn(\"batch_id\", lit(-1L)), dir) on BOTH dirs " +
             "(the overwrite commit resets the manifest epoch ledger, " +
             "so the restarted sequence's recycled ids land instead of " +
@@ -441,8 +359,7 @@ object IncrementalDedup {
   /** Starts the loop over a stream of (doc_id, text) documents against
     * a snapshot-committed index ([[SnapIndex]] — the default layout);
     * pass a [[BucketedIndex]] to the overload for the Exchange-free
-    * standing side, or a [[DirIndex]] for the legacy directory
-    * layout. */
+    * standing side. */
   def start(
       docs: DataFrame, indexDir: String, pairsDir: String,
       checkpointDir: String,

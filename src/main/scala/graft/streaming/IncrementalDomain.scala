@@ -10,7 +10,8 @@ import graft.text.DomainQueries
   * per-domain curation table must stay current without re-reading the
   * corpus. Two state tables, both landed through [[SnapshotTable]]
   * commits under the loop discipline (effectively-once off the
-  * manifest ledger, epoch gaps refused, lockstep enforced):
+  * manifest ledger, epoch gaps refused and lockstep enforced by
+  * [[EpochLedger]]):
   *
   *  - `maps` — ONE count-map table (domain, kind, key, m) covering
   *    every additive and multiset statistic at once: kind `hosted`
@@ -44,14 +45,6 @@ import graft.text.DomainQueries
   * for the rest) and one argmin over the mins table (text-digest
   * cardinality). The corpus itself is never re-read. */
 object IncrementalDomain {
-
-  private def requireNotLegacy(spark: SparkSession, dir: String): Unit =
-    if (SnapshotTable.currentSnapshot(spark, dir).isEmpty &&
-        IncrementalDedup.hasLegacyContent(spark, dir))
-      throw new IllegalStateException(
-        s"$dir holds the pre-snapshot epoch=N directory layout: replay " +
-          "its epochs into a fresh snapshot-committed dir before " +
-          "continuing the loop.")
 
   /** One epoch's count-map partial off the batch's extracted hosting
     * rows: (domain, kind, key, m), one shuffle. */
@@ -97,26 +90,14 @@ object IncrementalDomain {
   /** Land one epoch: extract the batch's hosting rows ONCE
     * (lineage-cut — the single batch-scale pass), commit the count-map
     * partial and the canonicality partial under the same batch id.
-    * Ledger discipline mirrors [[IncrementalQuality]]: gaps refused on
-    * BOTH tables, lockstep asserted on entry so a crash between the
+    * Admission ([[EpochLedger.admit]], maps then mins) refuses gaps on
+    * BOTH tables and asserts lockstep on entry, so a crash between the
     * two commits must be replayed, never skipped. */
   def processBatch(docs: DataFrame, mapsDir: String, minsDir: String,
       batchId: Long): Unit = {
     import graft.ops.Checkpoints.CheckpointOps
     val spark = docs.sparkSession
-    requireNotLegacy(spark, mapsDir)
-    requireNotLegacy(spark, minsDir)
-    val next = SnapshotTable.maxCommittedBatch(spark, mapsDir) + 1
-    require(batchId <= next,
-      s"epoch gap: batch $batchId after high-water mark ${next - 1}")
-    val minsNext = SnapshotTable.maxCommittedBatch(spark, minsDir) + 1
-    require(minsNext == next || minsNext == next - 1,
-      s"maps/mins ledgers out of lockstep: maps high-water ${next - 1}, " +
-        s"mins high-water ${minsNext - 1} — the pair must only ever be " +
-        "advanced through processBatch")
-    require(batchId <= minsNext,
-      s"epoch gap on the mins ledger: batch $batchId after mins " +
-        s"high-water mark ${minsNext - 1} — replay epoch $minsNext first")
+    EpochLedger.admit(spark, batchId, mapsDir, minsDir)
     // Lazy cut (r19): the extraction pass materializes inside the maps
     // append (its first consumer); the mins partial reuses the
     // persisted blocks — same single pass, one fewer job launch.
@@ -162,24 +143,11 @@ object IncrementalDomain {
       retracted: DataFrame, surviving: DataFrame,
       mapsDir: String, minsDir: String, batchId: Long): Unit = {
     val spark = retracted.sparkSession
-    requireNotLegacy(spark, mapsDir)
-    requireNotLegacy(spark, minsDir)
-    val next = SnapshotTable.maxCommittedBatch(spark, mapsDir) + 1
-    require(batchId <= next,
-      s"epoch gap: batch $batchId after high-water mark ${next - 1}")
-    // Same ledger discipline as processBatch (ADVICE r17): a crash
-    // between the maps and mins appends must be REPLAYED, never skipped
-    // — without the lockstep check a resume at batchId+1 would pass the
-    // maps gate and land on mins across the hole, silently losing the
-    // crashed epoch's tombstones (the retracted holder stays canonical).
-    val minsNext = SnapshotTable.maxCommittedBatch(spark, minsDir) + 1
-    require(minsNext == next || minsNext == next - 1,
-      s"maps/mins ledgers out of lockstep: maps high-water ${next - 1}, " +
-        s"mins high-water ${minsNext - 1} — the pair must only ever be " +
-        "advanced through processBatch/processRetractions")
-    require(batchId <= minsNext,
-      s"epoch gap on the mins ledger: batch $batchId after mins " +
-        s"high-water mark ${minsNext - 1} — replay epoch $minsNext first")
+    // Same admission as processBatch: a crash between the maps and mins
+    // appends must be REPLAYED, never skipped — a resume at batchId+1
+    // landing on mins across the hole would silently lose the crashed
+    // epoch's tombstones (the retracted holder stays canonical).
+    EpochLedger.admit(spark, batchId, mapsDir, minsDir)
     // Schema gate (ADVICE r17): SnapshotTable.read pins the schema from
     // the manifest head file's footer, so appending 'retract'-bearing
     // rows to a mins table whose standing files predate the retract
@@ -230,8 +198,6 @@ object IncrementalDomain {
     * exactly like the batch query over the surviving corpus. */
   def standingStats(spark: SparkSession, mapsDir: String,
       minsDir: String): DataFrame = {
-    requireNotLegacy(spark, mapsDir)
-    requireNotLegacy(spark, minsDir)
     val merged = SnapshotTable.read(spark, mapsDir)
       .groupBy(col("domain"), col("kind"), col("key"))
       .agg(sum(col("m")).as("m"))

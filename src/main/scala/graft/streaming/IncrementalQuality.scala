@@ -18,7 +18,7 @@ import graft.text.QualityQueries
   *
   * Per epoch: (1) the batch's train-split count partial lands as a
   * [[SnapshotTable]] commit on the counts table (effectively once off
-  * the manifest ledger, epoch gaps refused — the loop discipline);
+  * the manifest ledger, epoch gaps refused — [[EpochLedger]]);
   * (2) the batch's docs are scored against the STANDING model (counts
   * summed over every committed epoch INCLUDING this one — so a replay
   * of a crashed scores commit re-derives the identical frame) and land
@@ -35,16 +35,6 @@ import graft.text.QualityQueries
   * Nothing corpus-sized ever sits in driver state.
   */
 object IncrementalQuality {
-
-  /** Same legacy-layout refusal as the other loops: a pre-snapshot
-    * epoch-directory state dir must fail loud, not read as empty. */
-  private def requireNotLegacy(spark: SparkSession, dir: String): Unit =
-    if (SnapshotTable.currentSnapshot(spark, dir).isEmpty &&
-        IncrementalDedup.hasLegacyContent(spark, dir))
-      throw new IllegalStateException(
-        s"$dir holds the pre-snapshot epoch=N directory layout: replay " +
-          "its epochs into a fresh snapshot-committed dir (count " +
-          "partials are derived state) before continuing the loop.")
 
   /** One row per doc off the collapsed frame — shared by the count
     * partial's prior numerators AND the scoring union's synthetic
@@ -128,27 +118,11 @@ object IncrementalQuality {
       batchId: Long): Unit = {
     import graft.ops.Checkpoints.CheckpointOps
     val spark = docs.sparkSession
-    requireNotLegacy(spark, countsDir)
-    requireNotLegacy(spark, scoresDir)
-    val next = SnapshotTable.maxCommittedBatch(spark, countsDir) + 1
-    require(batchId <= next,
-      s"epoch gap: batch $batchId after high-water mark ${next - 1}")
-    // Lockstep invariant: the scores ledger trails the counts ledger by
-    // at most the one epoch a crash between the two commits leaves open.
-    // Checked on ENTRY so the misuse "crash landed counts N without
-    // scores N, caller resumes at N+1" fails loud here instead of
-    // silently losing epoch N's score rows (the counts-side appendOnce
-    // would no-op the replay and nothing downstream would ever error).
-    val scoresNext = SnapshotTable.maxCommittedBatch(spark, scoresDir) + 1
-    require(scoresNext == next || scoresNext == next - 1,
-      s"counts/scores ledgers out of lockstep: counts high-water " +
-        s"${next - 1}, scores high-water ${scoresNext - 1} — the pair " +
-        "must only ever be advanced through processBatch")
-    require(batchId <= scoresNext,
-      s"epoch gap on the scores ledger: batch $batchId after scores " +
-        s"high-water mark ${scoresNext - 1} — replay epoch $scoresNext " +
-        "first (its counts partial already landed; appendOnce skips it " +
-        "and only the missing scores commit runs)")
+    // Counts land before scores: a crash between the two commits leaves
+    // scores one epoch behind, and admission forces that epoch's replay
+    // (the counts appendOnce no-ops, the missing scores commit runs)
+    // instead of silently losing its score rows on a resume at N+1.
+    EpochLedger.admit(spark, batchId, countsDir, scoresDir)
     // Lazy cut (r19): the per-(doc, bucket) collapse is the epoch's
     // one corpus-scale pass; materializing it inside the counts-append
     // job (its first consumer) drops the standalone cut job while the
@@ -187,7 +161,6 @@ object IncrementalQuality {
 
   /** Every landed score row, from the pinned head snapshot. */
   def scores(spark: SparkSession, scoresDir: String): DataFrame = {
-    requireNotLegacy(spark, scoresDir)
     require(SnapshotTable.currentSnapshot(spark, scoresDir).nonEmpty,
       s"no committed epochs under $scoresDir")
     SnapshotTable.read(spark, scoresDir)

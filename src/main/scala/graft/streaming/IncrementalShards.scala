@@ -65,9 +65,7 @@ object IncrementalShards {
       survivors: DataFrame, docs: DataFrame,
       ratesDir: String, shardsDir: String, batchId: Long): Unit = {
     val spark = survivors.sparkSession
-    val next = SnapshotTable.maxCommittedBatch(spark, shardsDir) + 1
-    require(batchId <= next,
-      s"epoch gap: batch $batchId after high-water mark ${next - 1}")
+    EpochLedger.admit(spark, batchId, shardsDir)
     // Empty batches COMMIT an empty epoch (the IncrementalBars rule):
     // skipping would never advance the high-water mark and wedge the
     // sequence — an epoch whose survivors all failed the mixture gate

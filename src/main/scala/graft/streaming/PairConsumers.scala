@@ -22,18 +22,17 @@ import graft.ops.Checkpoints.CheckpointOps
 private[streaming] object PairConsumers {
 
   /** (key, component) labels over the accumulated pair table. A loop
-    * that has not emitted any pair yet has no pairs directory at all
-    * (the write is gated on non-empty batches) — the consumers treat
-    * that as the empty graph instead of failing the maintenance job.
-    * Snapshot-committed pair tables (the round-14 default landing,
-    * [[IncrementalDedup.landPairs]]) read their PINNED head manifest —
-    * a consumer racing an epoch append keeps the snapshot it resolved;
-    * legacy partition-overwrite tables read as plain directories. */
+    * that has not emitted any pair yet has no committed pairs snapshot
+    * (the write is gated on non-empty batches; a crashed first commit
+    * leaves only a torn manifest) — the consumers treat that as the
+    * empty graph instead of failing the maintenance job. Committed
+    * pair tables ([[IncrementalDedup.landPairs]]) read their PINNED
+    * head manifest — a consumer racing an epoch append keeps the
+    * snapshot it resolved. */
   def componentsOf(
       spark: org.apache.spark.sql.SparkSession, pairsDir: String,
       aCol: String, bCol: String, keyName: String,
       retracted: Option[DataFrame] = None): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(pairsDir)
     def emptyGraph = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType(Seq(
@@ -41,18 +40,11 @@ private[streaming] object PairConsumers {
           keyName, org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField(
           "component", org.apache.spark.sql.types.LongType))))
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+    if (graft.etl.SnapshotTable.currentSnapshot(spark, pairsDir).isEmpty) {
+      EpochLedger.requireSnapshotLayout(spark, pairsDir)
       return emptyGraph
-    val pairs =
-      if (graft.etl.SnapshotTable.currentSnapshot(spark, pairsDir).nonEmpty)
-        graft.etl.SnapshotTable.read(spark, pairsDir)
-      else if (graft.etl.SnapshotTable.isSnapshotFormat(spark, pairsDir))
-        // A snapshot-format table whose only commit is TORN (writer
-        // crashed mid-first-publish): the crashed half-commit must be
-        // invisible — the table is EMPTY, not a plain directory (that
-        // read path would choke on the manifests/ dir).
-        return emptyGraph
-      else spark.read.parquet(pairsDir)
+    }
+    val pairs = graft.etl.SnapshotTable.read(spark, pairsDir)
     // Retraction tolerance (r17 verdict missing item 1, extended to
     // the pair loops): edges INCIDENT to a retracted key leave the
     // graph before propagation, so components split exactly as a

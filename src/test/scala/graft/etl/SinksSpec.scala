@@ -144,65 +144,6 @@ class SinksSpec extends SparkSpec {
     assert(java.nio.file.Files.readString(java.nio.file.Paths.get(path)) == """{"a":1}""")
   }
 
-  test("epoch compaction folds old partitions into the base and converges under replay") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, lit}
-    val dir = tmpDir("epoch-compact") + "/t"
-    def write(b: Long, rows: Seq[(Long, String)]): Unit =
-      Sinks.overwritePartitions(
-        rows.toDF("id", "v").withColumn("batch_id", lit(b)), dir, "batch_id")
-    write(0L, Seq((1L, "a"), (2L, "b")))
-    write(1L, Seq((3L, "c")))
-    write(2L, Seq((4L, "d")))
-    def rows(): Set[(Long, String)] = spark.read.parquet(dir)
-      .select("id", "v").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    def parts(): Set[String] = new java.io.File(dir).listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
-    val before = rows()
-    // Fold epochs 0 and 1 into the base; data and the newest epoch
-    // are untouched.
-    assert(Sinks.compactEpochPartitions(spark, dir, 2L) == 2L)
-    assert(rows() == before, "folding must not change the row set")
-    assert(parts() == Set("batch_id=-1", "batch_id=2"))
-    // Idempotent rerun: nothing left below the watermark.
-    assert(Sinks.compactEpochPartitions(spark, dir, 2L) == 0L)
-    // Crash replay: base written but an epoch delete lost — rows
-    // duplicated between base and a resurrected epoch. The next run
-    // distinct-folds it away and converges to the same state.
-    Sinks.overwritePartitions(
-      spark.read.parquet(dir).filter(col("batch_id") === -1L)
-        .drop("batch_id").withColumn("batch_id", lit(0L)),
-      dir, "batch_id")
-    assert(Sinks.compactEpochPartitions(spark, dir, 2L) == 1L)
-    assert(rows() == before, "crash-state fold must converge")
-    assert(parts() == Set("batch_id=-1", "batch_id=2"))
-  }
-
-  test("adoptLegacyTable folds flat pre-epoch files into the base partition") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.lit
-    val dir = tmpDir("legacy-adopt") + "/t"
-    // The old blind-append layout: flat parquet files at the root.
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-      .write.mode("append").parquet(dir)
-    assert(Sinks.adoptLegacyTable(spark, dir), "flat files must be adopted")
-    val rows = spark.read.parquet(dir)
-    assert(rows.select("id", "v").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet ==
-      Set((1L, "a"), (2L, "b")))
-    assert(rows.selectExpr("cast(batch_id as long)").distinct()
-      .collect().map(_.getLong(0)).toSet == Set(-1L),
-      "adopted rows live in the base partition")
-    // Idempotent: a second call finds nothing flat to adopt.
-    assert(!Sinks.adoptLegacyTable(spark, dir))
-    // And the epoch machinery composes on top of the adopted table.
-    Sinks.overwritePartitions(
-      Seq((3L, "c")).toDF("id", "v").withColumn("batch_id", lit(0L)),
-      dir, "batch_id")
-    assert(spark.read.parquet(dir).count() == 3)
-  }
-
   test("materializeDedupedCorpus writes survivors with payloads, partitioned by source") {
     import spark.implicits._
     // Planted near-dup corpus (the DedupSpec fixture): doc 1 is an

@@ -215,40 +215,6 @@ class SnapshotTableSpec extends SparkSpec {
     assert(ids(dir) == Set(30L, 31L, 32L))
   }
 
-  test("pre-rename tables (staged under data/) read, classify as " +
-    "staged, and expire sweeps their legacy files") {
-    // Plant the layout the data -> _data rename left behind: a valid
-    // manifest referencing data/… files.
-    val dir = tmpDir("snaptab-legacy") + "/t"
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    val stage = tmpDir("snaptab-legacy-stage")
-    rows(3).coalesce(1).write.mode("overwrite").parquet(stage)
-    val part = fs.listStatus(new Path(stage)).toSeq
-      .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-    fs.mkdirs(new Path(s"$dir/data"))
-    assert(fs.rename(part, new Path(s"$dir/data/w-legacy-0.parquet")))
-    fs.mkdirs(new Path(s"$dir/manifests"))
-    val m = fs.create(new Path(s"$dir/manifests/snap-00000000.manifest"), false)
-    m.write("files=1\nrows=3\ndata/w-legacy-0.parquet\ncommit\n"
-      .getBytes("UTF-8"))
-    m.close()
-    // Reads resolve (manifests carry table-relative paths) and the
-    // legacy prefix classifies as STAGED — Backfill's multi-path scan
-    // route, not the attached-value one.
-    assert(ids(dir) == Set(0L, 1L, 2L))
-    assert(SnapshotTable.isStagedPath("data/w-legacy-0.parquet"))
-    assert(SnapshotTable.isStagedPath("_data/w-new-0.parquet"))
-    assert(!SnapshotTable.isStagedPath("adopted-toplevel.parquet"))
-    // Once a new-layout commit supersedes it and the grace window
-    // passes, expire must sweep the data/ file — pre-fix it leaked
-    // forever (the sweep only scanned _data/ and top-level files).
-    SnapshotTable.overwrite(rows(1, from = 40), dir)
-    SnapshotTable.expire(spark, dir, keepLast = 1, minAgeMs = 0)
-    assert(!fs.exists(new Path(s"$dir/data/w-legacy-0.parquet")),
-      "expire must sweep legacy data/ files once unreferenced")
-    assert(ids(dir) == Set(40L))
-  }
-
   test("epoch ledger survives compact + expire: replays no-op, the " +
     "sequence is not wedged, corrections stay possible") {
     val dir = tmpDir("snaptab-ledger") + "/t"
@@ -300,48 +266,5 @@ class SnapshotTableSpec extends SparkSpec {
     // And the replay contract holds within the NEW sequence.
     SnapshotTable.appendOnce(rows(1, from = 60), dir, batchId = 1L)
     assert(SnapshotTable.read(spark, dir).count() == 6)
-  }
-
-  test("pre-ledger manifests parse and keep their semantics; " +
-    "replaceBatch falls back to file-tag ownership after expiry") {
-    val dir = tmpDir("snaptab-preledger") + "/t"
-    SnapshotTable.appendOnce(rows(2), dir, batchId = 0L)
-    SnapshotTable.appendOnce(rows(2, from = 10), dir, batchId = 1L)
-    // Rewrite both manifests WITHOUT maxBatch headers — the exact
-    // bytes a pre-round-15 build committed.
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    val snaps = SnapshotTable.snapshots(spark, dir)
-    snaps.foreach { m =>
-      val p = new Path(s"$dir/manifests/snap-" + f"${m.id}%08d.manifest")
-      fs.delete(p, false)
-      val w = fs.create(p, false)
-      w.write((Seq(s"files=${m.files.length}", s"rows=${m.rows}",
-        s"batch=${m.batchId.get}") ++ m.files :+ "commit")
-        .mkString("", "\n", "\n").getBytes("UTF-8"))
-      w.close()
-    }
-    assert(SnapshotTable.snapshots(spark, dir).flatMap(_.maxBatch).isEmpty)
-    // Legacy fallback: the ledger derives from retained batch headers.
-    assert(SnapshotTable.maxCommittedBatch(spark, dir) == 1L)
-    SnapshotTable.appendOnce(rows(1), dir, batchId = 0L) // replay: no-op
-    assert(ids(dir) == Set(0L, 1L, 10L, 11L))
-    // Worst legacy posture: expire drops epoch 0's manifest AND the
-    // kept head is a header-less manifest (what a pre-ledger compact
-    // published) — no retained header mentions ANY epoch.
-    SnapshotTable.expire(spark, dir, keepLast = 1, minAgeMs = 0)
-    val kept = SnapshotTable.snapshots(spark, dir).last
-    val hp = new Path(s"$dir/manifests/snap-" + f"${kept.id}%08d.manifest")
-    fs.delete(hp, false)
-    val hw = fs.create(hp, false)
-    hw.write((Seq(s"files=${kept.files.length}", s"rows=${kept.rows}") ++
-      kept.files :+ "commit").mkString("", "\n", "\n").getBytes("UTF-8"))
-    hw.close()
-    assert(SnapshotTable.maxCommittedBatch(spark, dir) == -1L)
-    // Epoch 0's manifests are all gone but its b0- files live in the
-    // head: the correction must be ACCEPTED via file-tag ownership
-    // (pre-fix it was refused — "no committed snapshot carries batch
-    // 0" — blocking a legitimate late-data correction).
-    SnapshotTable.replaceBatch(rows(1, from = 70), dir, batchId = 0L)
-    assert(ids(dir) == Set(70L, 10L, 11L))
   }
 }

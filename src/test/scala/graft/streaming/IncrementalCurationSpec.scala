@@ -1,6 +1,10 @@
 package graft.streaming
 
 import graft.{SparkEntry, SparkSpec, Tables}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 import org.apache.spark.sql.functions._
 
 /** Streaming curation: the 3-epoch funnel (summed partials + read-time
@@ -9,7 +13,7 @@ import org.apache.spark.sql.functions._
   * equal the batch survivor frame — under range epochs (the loop's
   * insert-only monotone-id contract) and frozen standing planes.
   * Plus: replays no-op, epoch gaps refuse. */
-class IncrementalCurationSpec extends SparkSpec {
+class IncrementalCurationSpec extends SparkSpec with CrashBoundaries {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -268,5 +272,82 @@ class IncrementalCurationSpec extends SparkSpec {
       "the first-seen doc must pass the URL gate")
     assert(partials(1).getAs[Long]("n1") == 0L,
       "a later-epoch canonical duplicate must be gated out")
+  }
+
+  test("ann and curation epochs restore the caller's job description; " +
+      "ann's batch count runs under its probe label") {
+    val scratch = tmpDir("ledger-labels")
+    val docs = Tables(spark, sf).documents
+    IncrementalQuality.processBatch(
+      docs, s"$scratch/qcounts", s"$scratch/qscores", 0L)
+    IncrementalCuration.seedVerdicts(docs, s"$scratch/dver")
+    val vecs = Tables(spark, sf).embeddings
+      .select(col("vec_id"), col("embedding"))
+      .filter(col("vec_id") % 4 === 0)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.add(e.jobId -> Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")): Unit
+      }
+    }
+    sc.setJobDescription("outer cell")
+    sc.addSparkListener(listener)
+    try {
+      IncrementalAnn.processBatch(
+        vecs, s"$scratch/index", s"$scratch/cands", 0L)
+      assert(sc.getLocalProperty("spark.job.description") == "outer cell",
+        "an ann epoch must hand the caller's label back")
+      IncrementalCuration.processBatch(
+        docs.filter(col("doc_id") % 4 === 0), s"$scratch/urls",
+        s"$scratch/a5", s"$scratch/funnel", s"$scratch/qcounts",
+        s"$scratch/dver", 0L)
+      assert(sc.getLocalProperty("spark.job.description") == "outer cell",
+        "a curation epoch must hand the caller's label back")
+      import scala.jdk.CollectionConverters._
+      eventually(timeout(Span(30, Seconds))) {
+        assert(jobs.asScala.exists(_._2.startsWith("curation epoch 0")))
+      }
+      // Unlabelled jobs are the planes seeded above, still draining.
+      val first = jobs.asScala.filter(_._2.nonEmpty).minBy(_._1)._2
+      assert(first == "ann epoch 0: probe",
+        s"the epoch's first job (the batch count) ran as '$first'")
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.setJobDescription(null)
+    }
+  }
+
+  test("curation batch and retraction: a crash at any commit boundary " +
+      "is refused on resume and healed bit-equal by replay") {
+    val docs = Tables(spark, sf).documents
+    val triple = Seq("urls", "a5", "funnel")
+    def planes(root: String): Unit = {
+      IncrementalQuality.processBatch(
+        docs, s"$root/qcounts", s"$root/qscores", 0L)
+      IncrementalCuration.seedVerdicts(docs, s"$root/dver")
+    }
+    def batch(df: DataFrame, root: String, b: Long): Unit =
+      IncrementalCuration.processBatch(
+        df, s"$root/urls", s"$root/a5", s"$root/funnel",
+        s"$root/qcounts", s"$root/dver", b, Some(s"$root/tombs"))
+    val maxId = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
+    val mid = (maxId + 1) / 2
+    crashAtEveryBoundary("curation", triple,
+      root => {
+        planes(root); batch(docs.filter(col("doc_id") < mid), root, 0L)
+      },
+      (root, b) => batch(docs.filter(col("doc_id") >= mid), root, b),
+      1L)
+    crashAtEveryBoundary("curation-retract", triple,
+      root => { planes(root); batch(docs, root, 0L) },
+      (root, b) => IncrementalCuration.processRetractions(
+        docs.filter(col("doc_id") % 7 === 0),
+        docs.filter(col("doc_id") % 7 =!= 0),
+        s"$root/urls", s"$root/a5", s"$root/funnel", s"$root/qcounts",
+        s"$root/dver", s"$root/tombs", b),
+      1L)
   }
 }

@@ -118,36 +118,6 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(surv == Set((1L, 3L), (2L, 1L)))
   }
 
-  test("fresh checkpoint over a standing index is refused; folding to base unlocks it") {
-    import spark.implicits._
-    // Directory layout: the fold-to-base recovery is
-    // compactEpochPartitions (the snapshot layout's twin of this test
-    // lives in the SnapIndex suite below).
-    val indexDir = tmpDir("incr-fresh-index") + "/bands"
-    val pairsDir = tmpDir("incr-fresh-pairs") + "/pairs"
-    val index = IncrementalDedup.DirIndex(indexDir)
-    IncrementalDedup.processBatch(
-      Seq((1L, base)).toDF("doc_id", "text"), index, pairsDir, 0L)
-    IncrementalDedup.processBatch(
-      Seq((2L, far)).toDF("doc_id", "text"), index, pairsDir, 1L)
-    // Checkpoint reset: epoch ids restart at 0 over stored epochs
-    // {0, 1} — recycled ids would OVERWRITE epoch partitions and hide
-    // the whole index from the strictly-earlier probe. Must refuse.
-    val e = intercept[IllegalStateException] {
-      IncrementalDedup.processBatch(
-        Seq((3L, base)).toDF("doc_id", "text"), index, pairsDir, 0L)
-    }
-    assert(e.getMessage.contains("fresh checkpoint"))
-    // The prescribed recovery: fold epochs into the base partition —
-    // base rows sit below every new epoch, so the restart composes.
-    assert(graft.etl.Sinks.compactEpochPartitions(spark, indexDir, 2L) == 2L)
-    IncrementalDedup.processBatch(
-      Seq((3L, base)).toDF("doc_id", "text"), index, pairsDir, 0L)
-    val got = readStateTable(pairsDir).select("new_doc", "corpus_doc")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == Set((3L, 1L)), "the restarted epoch must probe the folded base")
-  }
-
   test("consumers on a loop that has emitted no pairs return the empty graph") {
     import spark.implicits._
     val pairsDir = tmpDir("no-pairs-yet") + "/pairs"
@@ -299,55 +269,32 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(got == Set((20L, 1L)))
   }
 
-  test("legacy flat index dir is auto-adopted before the first partitioned append") {
+  test("a flat directory-layout index dir is refused, naming the dir") {
     import spark.implicits._
     val indexDir = tmpDir("incr-legacy-index") + "/bands"
     val pairsDir = tmpDir("incr-legacy-pairs") + "/pairs"
-    // A pre-epoch index: bare parquet files at the dir root, no
-    // batch_id anywhere (what a pre-upgrade loop left behind).
+    // A directory-layout index: bare parquet files at the dir root, no
+    // snapshot commit.
     graft.dedup.DedupQueries.bandsOfDocs(
       Seq((1L, base), (2L, far)).toDF("doc_id", "text"))
       .write.mode("append").parquet(indexDir)
     assert(new java.io.File(indexDir).listFiles()
       .exists(f => f.isFile && f.getName.endsWith(".parquet")),
-      "fixture must be the flat legacy layout")
-    // The DEFAULT (snapshot) layout must refuse this dir loudly — a
-    // legacy index read as absent would silently skip the standing
-    // probe forever.
+      "fixture must be the flat directory layout")
+    // The snapshot layout must refuse this dir loudly — an index read
+    // as absent would silently skip the standing probe forever.
     val refusal = intercept[IllegalStateException] {
       IncrementalDedup.processBatch(
         Seq((20L, base)).toDF("doc_id", "text"), indexDir, pairsDir, 0L)
     }
-    assert(refusal.getMessage.contains("DirIndex"))
-    // Driven through DirIndex (the layout it belongs to), the upgraded
-    // loop appends epoch partitions; without adoption the mixed
-    // flat-plus-partitioned layout breaks partition discovery on the
-    // NEXT epoch's standing read. Adoption folds the flat rows to the
-    // base partition, so the probe still sees them.
-    val index = IncrementalDedup.DirIndex(indexDir)
-    IncrementalDedup.processBatch(
-      Seq((20L, base)).toDF("doc_id", "text"), index, pairsDir, 0L)
-    val got = readStateTable(pairsDir).select("new_doc", "corpus_doc")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == Set((20L, 1L)),
-      "the adopted standing state must still catch the duplicate")
-    IncrementalDedup.processBatch(
-      Seq((40L, base)).toDF("doc_id", "text"), index, pairsDir, 1L)
-    val idx = readStateTable(indexDir)
-    assert(idx.filter(org.apache.spark.sql.functions.col("batch_id") === -1L)
-      .select("doc_id").distinct().count() == 2,
-      "flat legacy rows must land in the batch_id=-1 base partition")
-    val got2 = readStateTable(pairsDir).select("new_doc", "corpus_doc")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got2 == Set((20L, 1L), (40L, 1L), (40L, 20L)),
-      "epochs after the adoption must read the mixed history cleanly")
+    assert(refusal.getMessage.contains(indexDir))
   }
 
   test("owner marker refuses a foreign checkpoint even over a single-epoch index") {
     import spark.implicits._
     val indexDir = tmpDir("incr-owner-index") + "/bands"
     val pairsDir = tmpDir("incr-owner-pairs") + "/pairs"
-    val index = IncrementalDedup.DirIndex(indexDir)
+    val index = IncrementalDedup.SnapIndex(indexDir)
     // Run A commits ONLY epoch 0 — the epoch scan alone cannot tell a
     // later fresh checkpoint apart from run A replaying its batch 0.
     IncrementalDedup.processBatch(
@@ -377,7 +324,7 @@ class IncrementalDedupSpec extends SparkSpec {
     import spark.implicits._
     val indexDir = tmpDir("incr-empty0-index") + "/bands"
     val pairsDir = tmpDir("incr-empty0-pairs") + "/pairs"
-    val index = IncrementalDedup.DirIndex(indexDir)
+    val index = IncrementalDedup.SnapIndex(indexDir)
     IncrementalDedup.processBatch(
       Seq((1L, base)).toDF("doc_id", "text"), index, pairsDir,
       0L, Some("ckpt-A"))

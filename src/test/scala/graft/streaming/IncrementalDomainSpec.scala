@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * partials are mergeable state, so the standing read must equal the
   * batch `domain_stats` EXACTLY over every landed doc — at every epoch
   * boundary, through replays, and through maintenance folds. */
-class IncrementalDomainSpec extends SparkSpec {
+class IncrementalDomainSpec extends SparkSpec with CrashBoundaries {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -236,5 +236,25 @@ class IncrementalDomainSpec extends SparkSpec {
       docs.filter(col("doc_id") % 3 === 0),
       s"$dir/maps", s"$dir/mins", 3L)
     assert(SnapshotTable.maxCommittedBatch(spark, s"$dir/mins") == 3L)
+  }
+
+  test("domain batch and retraction: a crash at any commit boundary " +
+      "is refused on resume and healed bit-equal by replay") {
+    val docs = Tables(spark, sf).documents
+    def land(root: String): Unit = IncrementalDomain.processBatch(
+      docs.filter(col("doc_id") % 2 === 0), s"$root/maps", s"$root/mins",
+      0L)
+    crashAtEveryBoundary("domain", Seq("maps", "mins"), land,
+      (root, b) => IncrementalDomain.processBatch(
+        docs.filter(col("doc_id") % 2 === 1),
+        s"$root/maps", s"$root/mins", b),
+      1L)
+    val landed = docs.filter(col("doc_id") % 2 === 0)
+    crashAtEveryBoundary("domain-retract", Seq("maps", "mins"), land,
+      (root, b) => IncrementalDomain.processRetractions(
+        landed.filter(col("doc_id") % 5 === 0),
+        landed.filter(col("doc_id") % 5 =!= 0),
+        s"$root/maps", s"$root/mins", b),
+      1L)
   }
 }

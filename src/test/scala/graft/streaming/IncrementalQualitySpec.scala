@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * from-scratch `quality_train` model EXACTLY at every point where the
   * landed epochs cover the same docs — through replays and through
   * maintenance folds. */
-class IncrementalQualitySpec extends SparkSpec {
+class IncrementalQualitySpec extends SparkSpec with CrashBoundaries {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -148,5 +148,18 @@ class IncrementalQualitySpec extends SparkSpec {
       s"$dir/counts", s"$dir/scores", 4L)
     assert(SnapshotTable.maxCommittedBatch(spark, s"$dir/counts") == 4L &&
       SnapshotTable.maxCommittedBatch(spark, s"$dir/scores") == 4L)
+  }
+
+  test("quality: a crash at any commit boundary is refused on resume " +
+      "and healed bit-equal by replay") {
+    val docs = Tables(spark, sf).documents
+    crashAtEveryBoundary("quality", Seq("counts", "scores"),
+      root => IncrementalQuality.processBatch(
+        docs.filter(col("doc_id") % 2 === 0),
+        s"$root/counts", s"$root/scores", 0L),
+      (root, b) => IncrementalQuality.processBatch(
+        docs.filter(col("doc_id") % 2 === 1),
+        s"$root/counts", s"$root/scores", b),
+      1L)
   }
 }

@@ -220,31 +220,23 @@ class IncrementalSemDedupSpec extends SparkSpec {
     val indexDir = tmpDir("sem-legacy-index") + "/buckets"
     val pairsDir = tmpDir("sem-legacy-pairs") + "/pairs"
     // A pre-upgrade index: RAW single-table buckets (all < 2^planes),
-    // epoch-stamped like any index the old loop left behind.
-    graft.sim.SimilarityQueries
-      .bucketRowsOf(Seq((1L, base), (2L, far)).toDF("vec_id", "embedding"))
-      .withColumn("batch_id", lit(0L))
-      .write.partitionBy("batch_id").parquet(indexDir)
+    // committed as an ordinary snapshot epoch.
+    graft.etl.SnapshotTable.appendOnce(
+      graft.sim.SimilarityQueries
+        .bucketRowsOf(Seq((1L, base), (2L, far)).toDF("vec_id", "embedding"))
+        .withColumn("batch_id", lit(0L)),
+      indexDir, 0L)
     assert(readStateTable(indexDir)
       .agg(max(col("bucket"))).collect()(0).getLong(0) < 256L,
       "fixture must be the raw single-table bucket range")
     // Restarting the upgraded loop over it must stop, not silently
     // serve ~1-table recall to every pre-upgrade vector forever —
     // and a RESUMED checkpoint never passes through batch 0, so the
-    // guard must fire on the first batch whatever its id. (Under the
-    // DEFAULT snapshot layout the dir is refused even earlier, as a
-    // legacy directory index; through DirIndex — the layout the
-    // fixture belongs to — the single-table guard is what fires.)
-    val layoutRefusal = intercept[IllegalStateException] {
-      IncrementalSemDedup.processBatch(
-        Seq((3L, scaledDup)).toDF("vec_id", "embedding"),
-        indexDir, pairsDir, 7L)
-    }
-    assert(layoutRefusal.getMessage.contains("DirIndex"))
+    // guard must fire on the first batch whatever its id.
     val e = intercept[IllegalStateException] {
       IncrementalSemDedup.processBatch(
         Seq((3L, scaledDup)).toDF("vec_id", "embedding"),
-        IncrementalDedup.DirIndex(indexDir), pairsDir, 7L)
+        indexDir, pairsDir, 7L)
     }
     assert(e.getMessage.contains("single-table"))
     assert(e.getMessage.contains("Rebuild"))
