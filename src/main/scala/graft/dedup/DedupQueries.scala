@@ -1700,64 +1700,16 @@ object DedupQueries {
     * bands are computed per run (batch-sized); the corpus side reads
     * the standing layout. */
   private def incrementalPairs(t: Tables): DataFrame =
-    incrementalPairsBetween(
+    bandProbe.pairs(
       bandsOfDocs(t.documents.filter(col("doc_id") % 20 === 0)),
       standingDedupState(t)._1)
 
-  /** [[incrementalPairs]] over a pre-computed (doc_id, band, bh) band
-    * frame — lets dedup_incremental_components derive BOTH its standing
-    * graph and its incremental edges from one checkpointed signature
-    * pass instead of re-minhashing the corpus per consumer. */
-  private def incrementalPairsOf(b: DataFrame): DataFrame = {
-    val isNew = col("doc_id") % 20 === 0
-    incrementalPairsBetween(b.filter(isNew), b.filter(!isNew))
-  }
-
-  /** New-batch bands vs a standing corpus band index: the corpus side
-    * keeps the family's degenerate-bucket rank cap, the (small) batch
-    * side broadcasts — the corpus is never self-joined or reshuffled.
-    * The broadcast semi-join on the batch's bucket keys narrows the
-    * standing index to COLLIDING buckets before the rank window, so
-    * the per-batch wide work is bounded by collision volume, not the
-    * index (a semi-join keeps whole buckets, so in-bucket ranks — and
-    * therefore the cap — are unchanged; the oracle pins this). Shared
-    * by the batch query above and the streaming micro-batch loop
+  /** New-batch bands vs a standing corpus band index through the
+    * shared capped [[CollisionProbe]] — key-only rows, no score.
+    * Shared by the batch queries above and the streaming text loop
     * ([[graft.streaming.IncrementalDedup]]). */
-  private[graft] def incrementalPairsBetween(
-      newBands: DataFrame, corpusBands: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val newSide = newBands
-      .select(col("doc_id").as("new_doc"), col("band").as("nband"),
-        col("bh").as("nbh"))
-    val bucketKeys = newSide
-      .select(col("nband").as("band"), col("nbh").as("bh")).distinct()
-    val corpusRanked = corpusBands
-      .join(broadcast(bucketKeys), Seq("band", "bh"), "left_semi")
-      // Collapse duplicate standing rows BEFORE cap ranking: the
-      // streaming index is appended at-least-once (a crash replay can
-      // double a batch's bands), and ranking duplicates would silently
-      // consume degenerate-bucket cap slots. The distinct runs on the
-      // bucket-pruned slice — batch-collision-sized, never the corpus
-      // — and is a no-op when the index has no replayed rows.
-      .select(col("doc_id"), col("band"), col("bh")).distinct()
-      .select(col("doc_id"), col("band"), col("bh"),
-        row_number().over(
-          Window.partitionBy(col("band"), col("bh")).orderBy(col("doc_id")))
-          .as("rk"))
-      .filter(col("rk") <= MaxBucketPairDocs)
-    corpusRanked
-      .join(broadcast(newSide),
-        col("band") === col("nband") && col("bh") === col("nbh"))
-      // Self-pair exclusion, defense in depth like the sem/media
-      // probes: unreachable through the loops (the epoch filter keeps
-      // a batch's own rows out of its standing view) and through the
-      // batch query (is_new splits are disjoint), but a hand-fed
-      // standing frame containing the batch must not pair docs with
-      // themselves.
-      .filter(col("doc_id") =!= col("new_doc"))
-      .select(col("new_doc"), col("doc_id").as("corpus_doc"))
-      .distinct()
-  }
+  private[graft] val bandProbe = CollisionProbe(
+    "doc_id", Seq("band", "bh"), MaxBucketPairDocs, "new_doc", "corpus_doc")
 
   /** INCREMENTAL connected components — the step that closes the
     * incremental pipeline end-to-end the way `dedup_survivors` closed
@@ -1833,7 +1785,7 @@ object DedupQueries {
     // pass is the NEW batch — batch-sized, the incremental contract.
     val (standingBands, standing0) = standingDedupState(t)
     val standing = standing0.cut(false)
-    val incr = incrementalPairsBetween(
+    val incr = bandProbe.pairs(
       bandsOfDocs(t.documents.filter(isNew)), standingBands)
       .cut(false)
     // Contract: corpus endpoint -> its standing component id (itself

@@ -632,6 +632,12 @@ object MultimodalQueries {
       .orderBy("item_id")
   }
 
+  /** Hamming distance between two `nBands`-long band arrays. */
+  private def hamming(nBands: Int): (Column, Column) => Column = (a, b) =>
+    (0 until nBands)
+      .map(i => bit_count(get(a, lit(i)).bitwiseXOR(get(b, lit(i)))).cast("long"))
+      .reduce(_ + _)
+
   /** The banded hamming-pair machinery shared by every fingerprint
     * modality (images: 8×8-bit bands; audio/video: 4×16-bit bands):
     * bucket by (band, key), capped all-pairs + star edges beyond
@@ -642,9 +648,7 @@ object MultimodalQueries {
       hashes: org.apache.spark.sql.DataFrame, nBands: Int,
       maxHamming: Int) = {
     import org.apache.spark.sql.expressions.Window
-    val bandRows = hashes.select(
-      col("item_id"), col("bands"),
-      posexplode(col("bands")).as(Seq("band", "key")))
+    val bandRows = mediaBandRows(hashes)
     val byBucket = Window.partitionBy(col("band"), col("key"))
     val ord = byBucket.orderBy(col("item_id"))
     val ranked = bandRows.select(
@@ -654,10 +658,6 @@ object MultimodalQueries {
       first(col("item_id")).over(ord).as("aitem"),
       first(col("bands")).over(ord).as("abands"))
       .cut(false)
-    def hamming(a: Column, b: Column): Column =
-      (0 until nBands)
-        .map(i => bit_count(get(a, lit(i)).bitwiseXOR(get(b, lit(i)))).cast("long"))
-        .reduce(_ + _)
     val headPairs = ranked
       .filter(col("rk") <= MaxBucketPairItems)
       .groupBy(col("band"), col("key"))
@@ -670,12 +670,12 @@ object MultimodalQueries {
             y => struct(x.as("a"), y.as("b")))))).as("p"))
       .select(
         col("p.a.item_id").as("item_a"), col("p.b.item_id").as("item_b"),
-        hamming(col("p.a.bands"), col("p.b.bands")).as("hamming"))
+        hamming(nBands)(col("p.a.bands"), col("p.b.bands")).as("hamming"))
     val tailStarEdges = ranked
       .filter(col("m") > 1 && col("rk") > MaxBucketPairItems)
       .select(
         col("aitem").as("item_a"), col("item_id").as("item_b"),
-        hamming(col("abands"), col("bands")).as("hamming"))
+        hamming(nBands)(col("abands"), col("bands")).as("hamming"))
     headPairs.union(tailStarEdges).distinct()
       .filter(col("hamming") <= maxHamming)
   }
@@ -700,47 +700,18 @@ object MultimodalQueries {
     hashes.select(col("item_id"), col("bands"),
       posexplode(col("bands")).as(Seq("band", "key")))
 
-  /** Batch-vs-standing media near-dup pairs — the fingerprint twin of
-    * the text loop's `incrementalPairsBetween` and the embedding
-    * loop's `incrementalSemPairsBetween`, same contract: the (small)
-    * batch's band keys broadcast; the standing index — EXPLODED
-    * [[mediaBandRows]], so its (band, key) are stored columns — is
-    * semi-narrowed to COLLIDING (band, key) buckets before anything
-    * wide; replayed duplicate index rows collapse on the pruned slice
-    * BEFORE cap ranking; the corpus side keeps the family's
-    * [[MaxBucketPairItems]] cap; hamming is verified only on the
-    * collision frame. Emits (new_item, corpus_item, hamming) ≤
-    * `maxHamming`. Shared by [[graft.streaming.IncrementalMediaDedup]]
-    * for every fingerprint modality (the banding differs upstream, the
-    * probe does not). */
-  private[graft] def incrementalMediaPairsBetween(
-      newHashes: org.apache.spark.sql.DataFrame,
-      corpusBandRows: org.apache.spark.sql.DataFrame,
-      nBands: Int, maxHamming: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    def hamming(a: Column, b: Column): Column =
-      (0 until nBands)
-        .map(i => bit_count(get(a, lit(i)).bitwiseXOR(get(b, lit(i)))).cast("long"))
-        .reduce(_ + _)
-    val newRows = newHashes.select(
-      col("item_id").as("new_item"), col("bands").as("nbands"),
-      posexplode(col("bands")).as(Seq("band", "key")))
-    val bucketKeys = newRows.select(col("band"), col("key")).distinct()
-    val corpusRanked = corpusBandRows
-      .join(broadcast(bucketKeys), Seq("band", "key"), "left_semi")
-      .select(col("item_id"), col("bands"), col("band"), col("key"))
-      .distinct()
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("band"), col("key")).orderBy(col("item_id"))))
-      .filter(col("rk") <= MaxBucketPairItems)
-    corpusRanked
-      .join(broadcast(newRows), Seq("band", "key"))
-      .filter(col("item_id") =!= col("new_item"))
-      .select(col("new_item"), col("item_id").as("corpus_item"),
-        hamming(col("nbands"), col("bands")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
+  /** Batch-vs-standing media near-dup pairs through the shared capped
+    * [[graft.dedup.CollisionProbe]] over [[mediaBandRows]] on both
+    * sides: the band arrays ride through the rank with the (band, key)
+    * bucket, and hamming over all `nBands` bands is verified on the
+    * collision frame only, keeping pairs ≤ `maxHamming`. One probe for
+    * every fingerprint modality — the banding differs upstream. */
+  private[graft] def mediaProbe(
+      nBands: Int, maxHamming: Int): graft.dedup.CollisionProbe =
+    graft.dedup.CollisionProbe("item_id", Seq("band", "key"),
+      MaxBucketPairItems, "new_item", "corpus_item",
+      Some(graft.dedup.CollisionProbe.Score("bands", reattach = false,
+        "hamming", hamming(nBands), _ <= maxHamming)))
 
   /** Parameterized DuckDB mirror of [[bandedHammingPairs]]: extends a
     * bands CTE (relation `${p}allbands`) with capped pairing, ending

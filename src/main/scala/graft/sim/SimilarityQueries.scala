@@ -147,7 +147,7 @@ object SimilarityQueries {
     * ordinal is PACKED into the bucket id (`bucket = t << nPlanes |
     * raw`): tables can never collide with each other, and every
     * single-key consumer — the probe's semi-join + rank cap
-    * ([[incrementalSemPairsBetween]]), the capped pairing
+    * ([[semProbe]]), the capped pairing
     * ([[scoredPairsOfRows]]), the `BucketedIndex(bucket)` zero-Exchange
     * layout — applies unchanged, just over L·2^nPlanes key values.
     *
@@ -167,51 +167,18 @@ object SimilarityQueries {
       col("embedding"))
 
 
-  /** Batch-vs-standing semantic near-dup pairs — the embedding twin of
-    * [[graft.dedup.DedupQueries.incrementalPairsBetween]], same
-    * contract: the (small) batch side broadcasts; the standing index
-    * is semi-narrowed to COLLIDING buckets before anything wide runs;
-    * replayed duplicate index rows collapse on the pruned slice BEFORE
-    * cap ranking (the at-least-once append contract); the corpus side
-    * keeps the family's [[MaxBucketPairVecs]] rank cap. Only pairs
-    * clearing [[NearDupSimE6]] emit — scoring happens on the
-    * bucket-collision frame, so per-batch cost follows collisions,
-    * never the index. */
-  private[graft] def incrementalSemPairsBetween(
-      newRows: DataFrame, corpusRows: DataFrame,
-      minSimE6: Long = NearDupSimE6): DataFrame = {
-    val newSide = newRows.select(col("vec_id").as("new_vec"),
-      col("bucket").as("nb"), col("embedding").as("nemb"))
-    val bucketKeys = newSide.select(col("nb").as("bucket")).distinct()
-    val slice = corpusRows
-      .join(broadcast(bucketKeys), Seq("bucket"), "left_semi")
-    // Cap-rank on NARROW (vec_id, bucket) keys, payloads re-attached
-    // by a broadcast semi-join (guide-§8 shape: shuffle the proxy,
-    // never the embedding bytes — the old distinct + rank window
-    // shuffled the collision slice's payloads twice per probe). The
-    // key distinct still collapses replayed standing rows before
-    // ranking (at-least-once appends must not consume cap slots);
-    // the ranked key set is ≤ cap × live buckets — broadcast-sized by
-    // construction. A replayed payload row surviving the semi-join
-    // only duplicates a pair, which the final distinct collapses.
-    val rankedKeys = slice
-      .select(col("vec_id"), col("bucket")).distinct()
-      .select(col("vec_id"), col("bucket"),
-        row_number().over(
-          Window.partitionBy(col("bucket")).orderBy(col("vec_id")))
-          .as("rk"))
-      .filter(col("rk") <= MaxBucketPairVecs)
-      .select(col("vec_id"), col("bucket"))
-    val corpusRanked = slice
-      .join(broadcast(rankedKeys), Seq("vec_id", "bucket"), "left_semi")
-    corpusRanked
-      .join(broadcast(newSide), col("bucket") === col("nb"))
-      .filter(col("vec_id") =!= col("new_vec"))
-      .select(col("new_vec"), col("vec_id").as("corpus_vec"),
-        simE6(col("nemb"), col("embedding")).as("sim_e6"))
-      .filter(col("sim_e6") >= minSimE6)
-      .distinct()
-  }
+  /** Batch-vs-standing semantic near-dup pairs through the shared
+    * capped [[graft.dedup.CollisionProbe]] on the packed bucket key:
+    * the embedding payload is re-attached after the rank (only narrow
+    * (vec_id, bucket) keys shuffle), and only pairs whose cosine on
+    * the collision frame clears `minSimE6` emit — the ANN loop passes
+    * `Long.MinValue` to keep every scored candidate. */
+  private[graft] def semProbe(
+      minSimE6: Long = NearDupSimE6): graft.dedup.CollisionProbe =
+    graft.dedup.CollisionProbe("vec_id", Seq("bucket"), MaxBucketPairVecs,
+      "new_vec", "corpus_vec",
+      Some(graft.dedup.CollisionProbe.Score("embedding", reattach = true,
+        "sim_e6", simE6, _ >= minSimE6)))
 
   /** Embeddings with their LSH bucket (shared by the ANN + near-dup ops). */
   private def bucketed(t: Tables): DataFrame =
@@ -2688,7 +2655,7 @@ object SimilarityQueries {
   /** INCREMENTAL semantic components — the embedding twin of
     * `dedup_incremental_components`, closing the streaming semantic
     * loop end-to-end: day N+1's cosine near-dup edges (the
-    * [[incrementalSemPairsBetween]] probe over the is-new split) are
+    * [[semProbe]] over the is-new split) are
     * labeled AGAINST the standing component state instead of
     * re-clustering the vector corpus. Identical merge contract to the
     * text side: standing labels (corpus-scale) are semi-narrowed to
@@ -2794,7 +2761,7 @@ object SimilarityQueries {
     val standingIdx = t.spark.read.parquet(s"$root/rows")
     val standing = t.spark.read.parquet(s"$root/labels").cut(false)
     val incr =
-      incrementalSemPairsBetween(rowsOf(emb.filter(isNew)), standingIdx)
+      semProbe().pairs(rowsOf(emb.filter(isNew)), standingIdx)
         .select(col("new_vec"), col("corpus_vec"))
         .cut(false)
     // Standing labels are corpus-scale: semi-narrow to the touched key

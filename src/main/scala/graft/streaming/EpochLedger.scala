@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import graft.etl.SnapshotTable
 
 /** The standing loops' shared epoch discipline — the epoch-wise form of
@@ -24,6 +25,11 @@ import graft.etl.SnapshotTable
   *    missing suffix commits) before the next one can land.
   *
   * Refusals name every ledger dir with its high-water mark.
+  *
+  * [[land]] and [[committedBefore]] are the write and read halves of
+  * an epoch: rows land stamped with their `batch_id`, and an epoch
+  * reads its ledgers strictly below its own id, so a replay sees the
+  * exact pre-epoch state and emits the exact same rows.
   */
 object EpochLedger {
 
@@ -40,6 +46,22 @@ object EpochLedger {
       s"epoch gap: batch $batchId after high-water marks ($state) — " +
         s"replay epoch ${nexts.last} first")
   }
+
+  /** Land `df` as epoch `batchId` of the ledger at `dir`: one
+    * `appendOnce` commit of its rows stamped with `batch_id` — atomic
+    * manifest swap, a racing reader keeps its pinned snapshot, and a
+    * replay of a landed epoch no-ops off the manifest ledger. */
+  def land(df: DataFrame, dir: String, batchId: Long): Unit =
+    SnapshotTable.appendOnce(
+      df.withColumn("batch_id", lit(batchId)), dir, batchId): Unit
+
+  /** Rows of a batch-stamped ledger from epochs STRICTLY BEFORE
+    * `batchId`. A no-op filter on the happy path (epoch ids are
+    * monotone); on a REPLAY it excludes the epoch's own landed rows,
+    * so the replay reads the exact pre-epoch state — the read-side
+    * half of the effectively-once contract. */
+  def committedBefore(ledger: DataFrame, batchId: Long): DataFrame =
+    ledger.filter(col("batch_id") < batchId)
 
   /** The ledger's high-water mark: the highest epoch committed, -1 when
     * nothing is. A dir with no snapshot commit must also hold no

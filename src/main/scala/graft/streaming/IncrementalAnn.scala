@@ -97,18 +97,13 @@ object IncrementalAnn {
     // 1. Bucket-collision candidates, UN-thresholded (Long.MinValue):
     // the batch against the standing index plus the batch against
     // itself — generation 0.
-    val intra = SimilarityQueries
-      .incrementalSemPairsBetween(newRows, newRows, Long.MinValue)
+    val probe = SimilarityQueries.semProbe(Long.MinValue)
+    val intra = probe.pairs(newRows, newRows)
       .filter(col("new_vec") > col("corpus_vec"))
     val emitted =
       if (index.exists(spark))
-        SimilarityQueries
-          .incrementalSemPairsBetween(
-            newRows,
-            antiTombs(IncrementalDedup.committedBefore(
-              index.read(spark), batchId), "vec_id"),
-            Long.MinValue)
-          .unionByName(intra)
+        probe.pairs(newRows, antiTombs(EpochLedger.committedBefore(
+          index.read(spark), batchId), "vec_id")).unionByName(intra)
       else intra
     val probePairs = emitted
       .select(least(col("new_vec"), col("corpus_vec")).as("vec_id"),
@@ -128,7 +123,7 @@ object IncrementalAnn {
     // distinct/shuffle carries by the table count (4×).
     val embAll = (if (index.exists(spark))
       table0Embeddings(antiTombs(
-        IncrementalDedup.committedBefore(index.read(spark), batchId),
+        EpochLedger.committedBefore(index.read(spark), batchId),
         "vec_id"))
         .unionByName(vecs.select(col("vec_id"), col("embedding")))
     else vecs.select(col("vec_id"), col("embedding")))
@@ -261,7 +256,7 @@ object IncrementalAnn {
     // 3. Land: pairs first, then the index — a crash between replays
     // cleanly (appendOnce no-ops the landed half).
     mark("land")
-    IncrementalDedup.landPairs(newEdges, candsDir, batchId)
+    EpochLedger.land(newEdges, candsDir, batchId)
     index.append(newRows, batchId)
   }
 
@@ -284,7 +279,7 @@ object IncrementalAnn {
   private def committedCands(
       spark: SparkSession, candsDir: String, batchId: Long): DataFrame =
     if (graft.etl.SnapshotTable.currentSnapshot(spark, candsDir).nonEmpty)
-      IncrementalDedup.committedBefore(
+      EpochLedger.committedBefore(
         graft.etl.SnapshotTable.read(spark, candsDir), batchId)
         .select("vec_id", "nbr_id", "sim_e6", "gen")
     else
@@ -425,8 +420,7 @@ object IncrementalAnn {
     EpochLedger.admit(spark, batchId, candsDir)
     if (retracted.isEmpty) return
     val rIds = retracted.select(col("vec_id")).distinct().cut(false)
-    graft.etl.SnapshotTable.appendOnce(
-      rIds.withColumn("batch_id", lit(batchId)), tombsDir, batchId): Unit
+    EpochLedger.land(rIds, tombsDir, batchId)
     val tombs = tombstonedIds(spark, tombsDir).cut(false)
     val cands = committedCands(spark, candsDir, batchId).cut()
     // Ranked out-edges of the retracted vertices only (scoped fold —
@@ -465,7 +459,7 @@ object IncrementalAnn {
       .select(col("vec_id"), col("nbr_id"),
         SimilarityQueries.simE6(col("ea"), col("eb")).as("sim_e6"))
       .withColumn("gen", lit(0L))
-    IncrementalDedup.landPairs(scored, candsDir, batchId)
+    EpochLedger.land(scored, candsDir, batchId)
   }
 
   /** FOLD-COMPACTION for the candidate ledger (the r17 verdict's

@@ -60,9 +60,7 @@ object IncrementalBars {
     // runs exactly once (no isEmpty probe job). The batch_id stamp is
     // what keeps a folded (compacted) epoch correctable — see
     // [[SnapshotTable.replaceBatch]]'s fallback.
-    SnapshotTable.appendOnce(
-      partialBars(trades).withColumn("batch_id", lit(batchId)),
-      barsDir, batchId): Unit
+    EpochLedger.land(partialBars(trades), barsDir, batchId)
   }
 
   /** Late-trade correction — the `force` backfill analog for the bars

@@ -86,7 +86,7 @@ object IncrementalCuration {
     // under the monotone-id contract).
     val standingUrls =
       if (SnapshotTable.currentSnapshot(spark, urlsDir).nonEmpty) {
-        val rows = IncrementalDedup.committedBefore(
+        val rows = EpochLedger.committedBefore(
           SnapshotTable.read(spark, urlsDir), batchId)
           .select(col("canonical_url"), col("batch_id"))
         val live = tombsDir.fold(rows) { d =>
@@ -120,14 +120,11 @@ object IncrementalCuration {
     // Land: URL mins, stage-5 survivors, funnel partial — all
     // batch-stamped appendOnce commits (replays no-op).
     mark("land")
-    SnapshotTable.appendOnce(
-      batchMin.withColumn("batch_id", lit(batchId)),
-      urlsDir, batchId): Unit
+    EpochLedger.land(batchMin, urlsDir, batchId)
     val a5 = fl.filter(col("f_url") === 1 && col("f_html") === 1 &&
       col("f_lang") === 1 && col("f_qual") === 1 && col("f_dom") === 1)
       .select(col("doc_id"), col("source"), col("tk"))
-    SnapshotTable.appendOnce(
-      a5.withColumn("batch_id", lit(batchId)), a5Dir, batchId): Unit
+    EpochLedger.land(a5, a5Dir, batchId)
     val partial = fl.agg(
       count(lit(1)).as("n0"),
       sum(col("f_url")).as("n1"),
@@ -137,9 +134,7 @@ object IncrementalCuration {
         .as("n4"),
       sum(col("f_url") * col("f_html") * col("f_lang") * col("f_qual")
         * col("f_dom")).as("n5"))
-    SnapshotTable.appendOnce(
-      partial.withColumn("batch_id", lit(batchId)),
-      funnelDir, batchId): Unit
+    EpochLedger.land(partial, funnelDir, batchId)
     }
   }
 
@@ -147,7 +142,7 @@ object IncrementalCuration {
   private def docTombs(
       spark: SparkSession, tombsDir: String, batchId: Long): DataFrame =
     if (SnapshotTable.currentSnapshot(spark, s"$tombsDir/docs").nonEmpty)
-      IncrementalDedup.committedBefore(
+      EpochLedger.committedBefore(
         SnapshotTable.read(spark, s"$tombsDir/docs"), batchId)
         .select(col("doc_id")).distinct()
     else spark.range(0).select(col("id").as("doc_id"))
@@ -157,7 +152,7 @@ object IncrementalCuration {
   private def urlLastTombs(
       spark: SparkSession, tombsDir: String, batchId: Long): DataFrame =
     if (SnapshotTable.currentSnapshot(spark, s"$tombsDir/urls").nonEmpty)
-      IncrementalDedup.committedBefore(
+      EpochLedger.committedBefore(
         SnapshotTable.read(spark, s"$tombsDir/urls"), batchId)
         .groupBy(col("canonical_url"))
         .agg(max(col("batch_id")).as("last_tomb"))
@@ -202,10 +197,9 @@ object IncrementalCuration {
     EpochLedger.admit(spark, batchId, urlsDir, a5Dir, funnelDir)
     if (retracted.isEmpty) return
     val nfR = CurationQueries.narrowFlags(retracted).cut()
-    SnapshotTable.appendOnce(
-      nfR.select(col("doc_id")).distinct()
-        .withColumn("batch_id", lit(batchId)),
-      s"$tombsDir/docs", batchId): Unit
+    EpochLedger.land(
+      nfR.select(col("doc_id")).distinct(),
+      s"$tombsDir/docs", batchId)
     // The bounded rescan: minima over the pre-retraction live holders
     // of the retraction's OWN urls (broadcast-pruned — the bound is
     // the retraction, never the corpus).
@@ -284,24 +278,19 @@ object IncrementalCuration {
         .as("min_before"))), Seq("canonical_url", "min_before"),
         "left_semi")
       .select(col("canonical_url"))
-    SnapshotTable.appendOnce(
-      deadUrls.withColumn("batch_id", lit(batchId)),
-      s"$tombsDir/urls", batchId): Unit
+    EpochLedger.land(deadUrls, s"$tombsDir/urls", batchId)
     // Land in the triple's lockstep order: urls (empty partial — the
     // probe needs no new minima, survivors' old partials stay live),
     // a5 (promoted survivors), funnel (the correction row).
-    SnapshotTable.appendOnce(
+    EpochLedger.land(
       nfR.select(col("canonical_url"), col("doc_id").as("min_doc"))
-        .limit(0).withColumn("batch_id", lit(batchId)),
-      urlsDir, batchId): Unit
+        .limit(0),
+      urlsDir, batchId)
     val a5P = flP.filter(col("f_url") === 1 && col("f_html") === 1 &&
       col("f_lang") === 1 && col("f_qual") === 1 && col("f_dom") === 1)
       .select(col("doc_id"), col("source"), col("tk"))
-    SnapshotTable.appendOnce(
-      a5P.withColumn("batch_id", lit(batchId)), a5Dir, batchId): Unit
-    SnapshotTable.appendOnce(
-      partial.withColumn("batch_id", lit(batchId)),
-      funnelDir, batchId): Unit
+    EpochLedger.land(a5P, a5Dir, batchId)
+    EpochLedger.land(partial, funnelDir, batchId)
   }
 
   /** The standing CURATED SURVIVORS — stage-6 fold at read: landed

@@ -1,46 +1,159 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.dedup.DedupQueries
+import graft.dedup.{CollisionProbe, DedupQueries}
 import graft.ops.Checkpoints.CheckpointOps
+import IncrementalDedup.{BandIndex, SnapIndex}
 
-/** Streaming twin of the `dedup_incremental` batch query: the day-N+1
-  * loop run continuously. Each micro-batch of new documents is
-  * MinHash-banded through the exact machinery the batch query uses
-  * ([[DedupQueries.bandsOfDocs]]), probed against the STANDING band
-  * index ([[DedupQueries.incrementalPairsBetween]] — batch side
-  * broadcast, standing side semi-narrowed to colliding buckets, the
-  * family's degenerate-bucket cap intact), and then appended to that
-  * index so later batches dedup against it. Emitted (new_doc,
-  * corpus_doc) candidate pairs append to their own table for the
-  * downstream merge step (`dedup_incremental_components`).
+/** One standing near-dedup loop — the day-N+1 pass of the reference's
+  * hourly append (bpi_etl_bigquery.py:27,279-282) run continuously, so
+  * an append never loads the same content twice. The text
+  * ([[IncrementalDedup]]), semantic ([[IncrementalSemDedup]]) and media
+  * ([[IncrementalMediaDedup]]) loops are this one step over their own
+  * fingerprint, index rows and [[CollisionProbe]]:
   *
-  * Scale posture: per micro-batch the standing index is touched by one
-  * semi-join (prunable to colliding buckets — at 100 TB the index is a
-  * table bucketed by (band, bh), so the probe reads matching buckets,
-  * not the corpus) and is NEVER re-banded, self-joined, or broadcast.
+  *  1. guards, BEFORE the empty-batch shortcut (a fresh checkpoint
+  *     whose batch 0 happens to be empty must still be refused) and
+  *     before any write: a standing index without `batch_id` is
+  *     refused (epoch-stamped rows cannot mix with it), then
+  *     [[IncrementalDedup.requireEpochContinuity]] and the loop's own
+  *     [[precheck]];
+  *  2. the batch is fingerprinted ONCE (cut: the CPU-heavy pass feeds
+  *     two probes and the append) and probed against itself —
+  *     same-batch duplicates pair, oriented new > corpus, no self or
+  *     mirror edges — and against the standing index's
+  *     [[EpochLedger.committedBefore]] view, so a replayed epoch probes
+  *     the exact pre-epoch state and emits the exact same pairs;
+  *  3. the pairs land ([[EpochLedger.land]], only when non-empty), the
+  *     batch's rows append to the index ([[BandIndex.append]]), and the
+  *     index is stamped with its owning checkpoint.
+  *
   * State lives in storage, not the state store — the index is the
-  * product, exactly like the batch pipeline's, so batch and streaming
-  * runs are interchangeable mid-corpus. The checkpoint gives
-  * restart-without-reprocessing on planned restarts; the appends are
-  * EFFECTIVELY-ONCE: every row is stamped with the epoch's `batch_id`
-  * and, in the default [[SnapIndex]] layout (round 14), lands as a
-  * [[graft.etl.SnapshotTable.appendOnce]] manifest commit — the
-  * manifest ledger makes an epoch replay (crash anywhere between the
-  * first write and the checkpoint commit) a no-op, a reader racing
-  * the append keeps its pinned snapshot, and a crashed half-commit is
-  * invisible until its replay. The bucketed layout cannot commit a
-  * manifest (it appends through the catalog), so it guards with a
-  * batch_id existence check instead. In every layout
-  * the probe still collapses duplicate standing rows on the
-  * bucket-pruned slice BEFORE cap ranking
-  * ([[DedupQueries.incrementalPairsBetween]]) as defense in depth, so
-  * even a hand-fed duplicate batch never consumes degenerate-bucket
-  * cap headroom.
-  */
-object IncrementalDedup {
+  * product, so batch and streaming runs are interchangeable
+  * mid-corpus. Appends are EFFECTIVELY-ONCE: a replay of a landed
+  * epoch no-ops table by table, a crash between the pairs and index
+  * commits heals by replaying the epoch, and the probe's distinct
+  * before the cap rank keeps even a hand-doubled index from consuming
+  * degenerate-bucket cap headroom. Per batch the standing index is
+  * touched by one bucket semi-join and is never re-fingerprinted,
+  * self-joined or broadcast. Every job of an epoch runs labelled
+  * `"<loop> epoch <id>: <phase>"` ([[EpochLedger.labelled]]). */
+private[streaming] abstract class PairLoop(name: String) {
+
+  /** The batch's fingerprint frame, computed once per epoch. */
+  protected def fingerprint(rows: DataFrame): DataFrame
+  /** Standing-index rows of a fingerprint frame. */
+  protected def indexRows(fp: DataFrame): DataFrame = fp
+  protected def probe: CollisionProbe
+  /** The loop's own pre-check, run with the guards. */
+  protected def precheck(index: BandIndex, spark: SparkSession): Unit = ()
+
+  /** One micro-batch step against a [[SnapIndex]] at `indexDir`.
+    * Exposed for specs; [[start]] wires it behind a checkpoint,
+    * passing the epoch id that makes replays idempotent. */
+  private[graft] def processBatch(
+      rows: DataFrame, indexDir: String, pairsDir: String,
+      batchId: Long): Unit =
+    processBatch(rows, SnapIndex(indexDir), pairsDir, batchId, None)
+
+  private[graft] def processBatch(
+      rows: DataFrame, index: BandIndex, pairsDir: String,
+      batchId: Long, ownerId: Option[String] = None): Unit = {
+    val spark = rows.sparkSession
+    EpochLedger.labelled(spark, s"$name epoch $batchId") { mark =>
+      mark("guards")
+      val standing = if (index.exists(spark)) Some(index.read(spark)) else None
+      if (standing.exists(!_.columns.contains("batch_id")))
+        throw new IllegalStateException(
+          s"standing index $index uses the pre-epoch layout (no batch_id " +
+            "column); epoch-stamped appends cannot mix with it. Rebuild " +
+            "it once into a fresh index with batch_id = -1 on every row " +
+            "and point the loop there.")
+      IncrementalDedup.requireEpochContinuity(index, spark, batchId, ownerId)
+      precheck(index, spark)
+      if (!rows.isEmpty) {
+        mark("probe")
+        val batch = indexRows(fingerprint(rows).cut(false))
+        val intra = probe.pairs(batch, batch)
+          .filter(col(probe.newCol) > col(probe.corpusCol))
+        val emitted = standing.fold(intra)(s => probe
+          .pairs(batch, EpochLedger.committedBefore(s, batchId))
+          .unionByName(intra))
+        // Checkpointed: isEmpty is an action, and without the pin the
+        // landing below would run the whole standing probe again.
+        val pairs = emitted.cut(false)
+        val hasPairs = !pairs.isEmpty
+        mark("land")
+        if (hasPairs) EpochLedger.land(pairs, pairsDir, batchId)
+        index.append(batch, batchId)
+        for (id <- ownerId; if index.owner(spark).isEmpty)
+          index.writeOwner(spark, id)
+      }
+    }
+  }
+
+  /** Starts the loop over a stream of batch rows against a
+    * [[SnapIndex]]; pass a [[IncrementalDedup.BucketedIndex]] to the
+    * overload for the Exchange-free standing side. */
+  def start(
+      rows: DataFrame, indexDir: String, pairsDir: String,
+      checkpointDir: String, trigger: Trigger): StreamingQuery =
+    start(rows, SnapIndex(indexDir), pairsDir, checkpointDir, trigger)
+
+  def start(
+      rows: DataFrame, indexDir: String, pairsDir: String,
+      checkpointDir: String): StreamingQuery =
+    start(rows, SnapIndex(indexDir), pairsDir, checkpointDir,
+      Streaming.HourlyTrigger)
+
+  def start(
+      rows: DataFrame, index: BandIndex, pairsDir: String,
+      checkpointDir: String,
+      trigger: Trigger = Streaming.HourlyTrigger): StreamingQuery =
+    rows.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        // The checkpoint dir IS the epoch sequence's identity: batch
+        // ids are scoped to it, so it is what the owner marker names.
+        processBatch(batch.toDF(), index, pairsDir, batchId,
+          Some(checkpointDir))
+      }
+      .start()
+
+  /** Periodic components consumer over the loop's pair table — cluster
+    * labels read off the loop's own state ([[PairConsumers]]). */
+  def components(spark: SparkSession, pairsDir: String): DataFrame =
+    PairConsumers.componentsOf(
+      spark, pairsDir, probe.newCol, probe.corpusCol, probe.id)
+
+  /** Periodic survivors consumer: min-id representative per cluster +
+    * unpaired corpus rows, with cluster sizes. Pass the retracted keys
+    * (with the SURVIVING corpus) after a takedown: edges through
+    * retracted rows leave the graph and the re-fold promotes runner-up
+    * representatives, ≡ a rebuild on survivors. */
+  def survivors(corpus: DataFrame, pairsDir: String,
+      retracted: Option[DataFrame] = None): DataFrame =
+    PairConsumers.survivorsOf(
+      corpus, pairsDir, probe.newCol, probe.corpusCol, probe.id, retracted)
+}
+
+/** Streaming twin of the `dedup_incremental` batch query: documents
+  * are MinHash-banded through the batch query's own machinery
+  * ([[DedupQueries.bandsOfDocs]]) and probed on (band, bh)
+  * ([[DedupQueries.bandProbe]]); the index stores the key-only band
+  * rows. Emitted (new_doc, corpus_doc) pairs feed the downstream merge
+  * step (`dedup_incremental_components`). This object also holds the
+  * standing-index layouts and the fresh-checkpoint guard every pair
+  * loop shares. */
+object IncrementalDedup extends PairLoop("dedup") {
+
+  protected def fingerprint(docs: DataFrame): DataFrame =
+    DedupQueries.bandsOfDocs(docs)
+  protected def probe: CollisionProbe = DedupQueries.bandProbe
 
   /** Storage abstraction for the STANDING band index — where the
     * streaming loop's state actually lives. Two layouts:
@@ -59,8 +172,8 @@ object IncrementalDedup {
     *    (IncrementalDedupSpec pins the Exchange-free plan).
     */
   sealed trait BandIndex {
-    def exists(spark: org.apache.spark.sql.SparkSession): Boolean
-    def read(spark: org.apache.spark.sql.SparkSession): DataFrame
+    def exists(spark: SparkSession): Boolean
+    def read(spark: SparkSession): DataFrame
     /** Lands `bands` stamped with `batchId`, EFFECTIVELY-ONCE: calling
       * again with the same id must converge, not double. */
     def append(bands: DataFrame, batchId: Long): Unit
@@ -68,9 +181,9 @@ object IncrementalDedup {
       * which streaming checkpoint owns this index's epoch sequence.
       * None when no marker has been written (pre-marker index, or a
       * layout with nowhere durable to put one). */
-    def owner(spark: org.apache.spark.sql.SparkSession): Option[String]
+    def owner(spark: SparkSession): Option[String]
     def writeOwner(
-        spark: org.apache.spark.sql.SparkSession, id: String): Unit
+        spark: SparkSession, id: String): Unit
   }
 
   /** The checkpoint-owner marker shared by the file-backed layouts:
@@ -82,7 +195,7 @@ object IncrementalDedup {
   private object OwnerMarker {
     private def path(dir: String) =
       new org.apache.hadoop.fs.Path(dir, "_graft_owner")
-    def read(spark: org.apache.spark.sql.SparkSession,
+    def read(spark: SparkSession,
         dir: String): Option[String] = {
       val p = path(dir)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -94,7 +207,7 @@ object IncrementalDedup {
         finally in.close()
       }
     }
-    def write(spark: org.apache.spark.sql.SparkSession,
+    def write(spark: SparkSession,
         dir: String, id: String): Unit = {
       val p = path(dir)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -109,52 +222,45 @@ object IncrementalDedup {
   }
 
   /** Standing index as a [[graft.etl.SnapshotTable]] — the DEFAULT
-    * layout since round 14 (the String-dir overloads build it):
-    * epochs land as atomic `appendOnce` manifest commits, so the
-    * reader/writer conventions the directory layout needed
-    * (`_SUCCESS` gating, partition overwrite) disappear — a reader
-    * racing an epoch append keeps its pinned snapshot, a crashed
-    * half-commit is invisible until its replay, and effectively-once
-    * comes from the manifest ledger rather than overwrite
-    * idempotence. Rows are stamped with `batch_id` (the probe's
-    * [[committedBefore]] view and the continuity guard read it, same
-    * as the other layouts). Maintenance: `SnapshotTable.compact` folds
-    * small epoch files, `expire` GCs past the reader-grace window.
-    * The [[BucketedIndex]] remains the zero-Exchange probe layout at
-    * warehouse scale; this layout's probe re-shuffles the
-    * bucket-pruned collision slice. */
+    * layout (the String-dir overloads build it): epochs land as atomic
+    * [[EpochLedger.land]] commits, so a reader racing an epoch append
+    * keeps its pinned snapshot, a crashed half-commit is invisible
+    * until its replay, and a replay no-ops off the manifest ledger.
+    * Maintenance: `SnapshotTable.compact` folds small epoch files,
+    * `expire` GCs past the reader-grace window. The [[BucketedIndex]]
+    * remains the zero-Exchange probe layout at warehouse scale; this
+    * layout's probe re-shuffles the bucket-pruned collision slice. */
   final case class SnapIndex(dir: String) extends BandIndex {
     import graft.etl.SnapshotTable
     /** A populated dir without a snapshot commit REFUSES rather than
       * reading as absent, which would silently skip the standing probe
       * forever ([[EpochLedger.requireSnapshotLayout]]). */
-    def exists(spark: org.apache.spark.sql.SparkSession): Boolean =
+    def exists(spark: SparkSession): Boolean =
       if (SnapshotTable.currentSnapshot(spark, dir).nonEmpty) true
       else { EpochLedger.requireSnapshotLayout(spark, dir); false }
-    def read(spark: org.apache.spark.sql.SparkSession): DataFrame =
+    def read(spark: SparkSession): DataFrame =
       SnapshotTable.read(spark, dir)
-    def append(bands: DataFrame, batchId: Long): Unit = {
-      SnapshotTable.appendOnce(
-        bands.withColumn("batch_id", lit(batchId)), dir, batchId): Unit
-    }
-    def owner(spark: org.apache.spark.sql.SparkSession): Option[String] =
+    def append(bands: DataFrame, batchId: Long): Unit =
+      EpochLedger.land(bands, dir, batchId)
+    def owner(spark: SparkSession): Option[String] =
       OwnerMarker.read(spark, dir)
     def writeOwner(
-        spark: org.apache.spark.sql.SparkSession, id: String): Unit =
+        spark: SparkSession, id: String): Unit =
       OwnerMarker.write(spark, dir, id)
   }
 
   /** `key` is the bucketing column — "bh" for the text band index,
-    * "bucket" for the semantic loop's packed (table, bucket) key:
-    * HashPartitioning(key) satisfies every key-clustered requirement
-    * downstream of either probe (subset-of-clustering rule), so the
-    * zero-Exchange standing side is layout-generic. */
+    * "bucket" for the semantic loop's packed (table, bucket) key, "key"
+    * for the media band key: HashPartitioning(key) satisfies every
+    * key-clustered requirement downstream of the probe
+    * (subset-of-clustering rule), so the zero-Exchange standing side is
+    * layout-generic. */
   final case class BucketedIndex(
       table: String, buckets: Int = 32, key: String = "bh")
       extends BandIndex {
-    def exists(spark: org.apache.spark.sql.SparkSession): Boolean =
+    def exists(spark: SparkSession): Boolean =
       spark.catalog.tableExists(table)
-    def read(spark: org.apache.spark.sql.SparkSession): DataFrame =
+    def read(spark: SparkSession): DataFrame =
       spark.table(table)
     /** bucketBy and insertInto don't compose (no partition overwrite
       * into a bucketed table), so replay idempotence comes from a
@@ -163,34 +269,21 @@ object IncrementalDedup {
       * publishes nothing (committer semantics) — the id is either
       * fully present or fully absent. The guard probe is one
       * filter-pushed scan (each append's files carry a constant
-      * batch_id, so row-group stats skip everything else). */
+      * batch_id, so row-group stats skip everything else). A table
+      * without batch_id never gets here: the loop's guards refuse it
+      * (insertInto matches columns POSITIONALLY, so epoch-stamped rows
+      * would silently corrupt it). */
     def append(bands: DataFrame, batchId: Long): Unit = {
       val spark = bands.sparkSession
-      val landed = exists(spark) && {
-        val stored = read(spark)
-        // A pre-epoch bucketed table has no batch_id column; probing it
-        // would throw AnalysisException (inconsistent with
-        // committedBefore / requireEpochContinuity, which both check
-        // first). Appending epoch-stamped rows is not an option either:
-        // insertInto matches columns POSITIONALLY, so the extra column
-        // would silently corrupt the table. Fail with the migration.
-        if (!stored.columns.contains("batch_id"))
-          throw new IllegalStateException(
-            s"standing bucketed index '$table' uses the pre-epoch layout " +
-              "(no batch_id column); epoch-stamped appends cannot mix with " +
-              "it. Rebuild it once with the batch_id column: " +
-              "Bucketing.appendBucketed(read(table).withColumn(\"batch_id\", " +
-              "lit(-1L)), freshTable, key, buckets) and point the loop at " +
-              "the fresh table.")
-        !stored.filter(col("batch_id") === batchId).isEmpty
-      }
+      val landed = exists(spark) &&
+        !read(spark).filter(col("batch_id") === batchId).isEmpty
       if (!landed)
         graft.ops.Bucketing.appendBucketed(
           bands.withColumn("batch_id", lit(batchId)), table, key, buckets)
     }
     /** Marker lives in the table's catalog properties — survives
       * exactly as long as the table itself. */
-    def owner(spark: org.apache.spark.sql.SparkSession): Option[String] =
+    def owner(spark: SparkSession): Option[String] =
       if (!exists(spark)) None
       else spark.sessionState.catalog
         .getTableMetadata(
@@ -200,88 +293,12 @@ object IncrementalDedup {
     // checkpoint path may contain them; the catalog stores the
     // unescaped value, so the read side needs no inverse).
     def writeOwner(
-        spark: org.apache.spark.sql.SparkSession, id: String): Unit = {
+        spark: SparkSession, id: String): Unit = {
       val lit = id.replace("'", "''")
       spark.sql(
         s"ALTER TABLE $table SET TBLPROPERTIES ('graft.owner' = '$lit')")
     }
   }
-
-  /** Land one epoch's emitted pairs — shared by the pair loops — as a
-    * [[graft.etl.SnapshotTable.appendOnce]] commit: atomic manifest
-    * swap, a racing components/survivors consumer keeps its pinned
-    * snapshot, and epoch replays no-op off the manifest ledger.
-    * Maintenance folds/GCs via `SnapshotTable.compact`/`expire`. */
-  private[streaming] def landPairs(
-      pairs: DataFrame, pairsDir: String, batchId: Long): Unit =
-    graft.etl.SnapshotTable.appendOnce(
-      pairs.withColumn("batch_id", lit(batchId)), pairsDir, batchId): Unit
-
-  /** One micro-batch step: probe, emit pairs, grow the index.
-    * Exposed for specs; [[start]] wires it behind a checkpoint,
-    * passing the epoch id that makes replays idempotent. The
-    * String-dir overloads drive the [[SnapIndex]] snapshot layout
-    * (round 14 — the landing conventions unified on SnapshotTable
-    * commits); construct a [[BucketedIndex]] explicitly for the
-    * zero-Exchange bucketed layout. */
-  private[graft] def processBatch(
-      docs: DataFrame, indexDir: String, pairsDir: String,
-      batchId: Long): Unit =
-    processBatch(docs, SnapIndex(indexDir), pairsDir, batchId, None)
-
-  private[graft] def processBatch(
-      docs: DataFrame, index: BandIndex, pairsDir: String,
-      batchId: Long, ownerId: Option[String] = None): Unit = {
-    val spark = docs.sparkSession
-    // Guards BEFORE the empty-batch shortcut: a fresh checkpoint whose
-    // batch 0 happens to be empty (no-data micro-batch) must still be
-    // refused at batch 0 — batch 1 would otherwise start overwriting
-    // the prior run's epochs with every guard skipped.
-    requireEpochContinuity(index, spark, batchId, ownerId)
-    if (docs.isEmpty) return
-    // The batch is re-read below the pair join AND the index append;
-    // checkpoint so banding (the CPU-heavy md5/minhash pass) runs once.
-    val newBands = DedupQueries.bandsOfDocs(docs).cut(false)
-    // Same-batch duplicates must pair too: the standing-index probe
-    // below runs before this batch's bands join the index, so two
-    // copies landing in ONE batch would otherwise stay unlinked
-    // forever (strictly lower recall than the batch pipeline's
-    // corpus-vs-corpus pass). The batch is probed against itself with
-    // the same capped machinery; doc_id ordering drops self edges and
-    // mirror duplicates.
-    val intra = DedupQueries.incrementalPairsBetween(newBands, newBands)
-      .filter(col("new_doc") > col("corpus_doc"))
-    val emitted =
-      if (index.exists(spark))
-        DedupQueries.incrementalPairsBetween(
-          newBands, committedBefore(index.read(spark), batchId))
-          .unionByName(intra)
-      else intra
-    // Checkpointed: isEmpty is an action, and without the pin the
-    // append below would re-run the whole standing-index probe
-    // (semi-join + rank window + pair join) a second time.
-    val pairs = emitted.cut(false)
-    if (!pairs.isEmpty) landPairs(pairs, pairsDir, batchId)
-    index.append(newBands, batchId)
-    stampOwner(index, spark, ownerId)
-  }
-
-  /** Periodic components consumer over the loop's pair table — the
-    * streaming analog of `dedup_incremental_components`' final labels,
-    * read off the loop's own state ([[PairConsumers]]). */
-  def components(
-      spark: org.apache.spark.sql.SparkSession, pairsDir: String): DataFrame =
-    PairConsumers.componentsOf(spark, pairsDir, "new_doc", "corpus_doc", "doc_id")
-
-  /** Periodic survivors consumer: min-doc_id representative per
-    * cluster + unpaired corpus rows, with cluster sizes. Pass the
-    * retracted keys (with the SURVIVING corpus) after a takedown:
-    * edges through retracted docs leave the graph and the re-fold
-    * promotes runner-up representatives, ≡ a rebuild on survivors. */
-  def survivors(corpus: DataFrame, pairsDir: String,
-      retracted: Option[DataFrame] = None): DataFrame =
-    PairConsumers.survivorsOf(
-      corpus, pairsDir, "new_doc", "corpus_doc", "doc_id", retracted)
 
   /** Refuses epoch-id recycling: foreachBatch ids are
     * checkpoint-scoped, so pointing a loop with a fresh (or reset)
@@ -305,7 +322,7 @@ object IncrementalDedup {
     * no-op'ing as replays (the recall-loss failure the guard exists to
     * prevent) — then delete/rewrite the `_graft_owner` marker. */
   private[streaming] def requireEpochContinuity(
-      index: BandIndex, spark: org.apache.spark.sql.SparkSession,
+      index: BandIndex, spark: SparkSession,
       batchId: Long, ownerId: Option[String] = None): Unit =
     if (batchId == 0L && index.exists(spark)) {
       for (o <- ownerId; m <- index.owner(spark); if m != o)
@@ -316,9 +333,7 @@ object IncrementalDedup {
             "the base epoch (SnapshotTable.overwrite(read(dir)" +
             ".withColumn(\"batch_id\", lit(-1L)), dir) on both dirs) " +
             "and remove the _graft_owner marker to transfer ownership.")
-      val stored = index.read(spark)
-      if (stored.columns.contains("batch_id") &&
-        !stored.filter(col("batch_id") > 0).isEmpty)
+      if (!index.read(spark).filter(col("batch_id") > 0).isEmpty)
         throw new IllegalStateException(
           "fresh checkpoint over a standing index with epochs > 0: " +
             "recycled batch ids would collide with prior epochs and " +
@@ -331,61 +346,4 @@ object IncrementalDedup {
             "no-op'ing as replays) — then remove the _graft_owner " +
             "marker.")
     }
-
-  /** First-write ownership stamp: records which checkpoint drives this
-    * index so [[requireEpochContinuity]] can refuse a different one at
-    * its batch 0. Idempotent and cheap (one marker existence probe per
-    * batch); never overwrites an existing marker. */
-  private[streaming] def stampOwner(
-      index: BandIndex, spark: org.apache.spark.sql.SparkSession,
-      ownerId: Option[String]): Unit =
-    for (id <- ownerId; if index.owner(spark).isEmpty)
-      index.writeOwner(spark, id)
-
-  /** Standing rows from epochs STRICTLY BEFORE `batchId` — the probe's
-    * view of the index. On the happy path this filter is a no-op
-    * (epoch ids are monotone, so everything stored is older); on an
-    * epoch REPLAY it excludes the epoch's own already-landed rows, so
-    * the replay probes the exact pre-epoch standing state and emits
-    * the exact same pairs (no self-pairs, no mirror orientations of
-    * same-batch dups) — the read-side half of the effectively-once
-    * contract. Shared by the three incremental loops. */
-  private[streaming] def committedBefore(
-      index: DataFrame, batchId: Long): DataFrame =
-    if (index.columns.contains("batch_id"))
-      index.filter(col("batch_id") < batchId)
-    else index // pre-batch_id layout: at-least-once semantics unchanged
-
-  /** Starts the loop over a stream of (doc_id, text) documents against
-    * a snapshot-committed index ([[SnapIndex]] — the default layout);
-    * pass a [[BucketedIndex]] to the overload for the Exchange-free
-    * standing side. */
-  def start(
-      docs: DataFrame, indexDir: String, pairsDir: String,
-      checkpointDir: String,
-      trigger: Trigger): StreamingQuery =
-    start(docs, SnapIndex(indexDir), pairsDir, checkpointDir, trigger)
-
-  def start(
-      docs: DataFrame, indexDir: String, pairsDir: String,
-      checkpointDir: String): StreamingQuery =
-    start(docs, SnapIndex(indexDir), pairsDir, checkpointDir,
-      Streaming.HourlyTrigger)
-
-  def start(
-      docs: DataFrame, index: BandIndex, pairsDir: String,
-      checkpointDir: String,
-      trigger: Trigger = Streaming.HourlyTrigger): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // The checkpoint dir IS the epoch sequence's identity: batch
-        // ids are scoped to it, so it is what the index's owner marker
-        // must name ([[requireEpochContinuity]]).
-        processBatch(batch.toDF(), index, pairsDir, batchId,
-          Some(checkpointDir))
-      }
-      .start()
 }

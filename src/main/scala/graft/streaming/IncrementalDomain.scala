@@ -105,12 +105,8 @@ object IncrementalDomain {
       .select(col("doc_id"), col("text"), col("lang"), col("fetch_seq"),
         col("registrable_domain"), col("subdomain"))
       .cut(false)
-    SnapshotTable.appendOnce(
-      mapPartial(ext).withColumn("batch_id", lit(batchId)),
-      mapsDir, batchId): Unit
-    SnapshotTable.appendOnce(
-      minPartial(ext).withColumn("batch_id", lit(batchId)),
-      minsDir, batchId): Unit
+    EpochLedger.land(mapPartial(ext), mapsDir, batchId)
+    EpochLedger.land(minPartial(ext), minsDir, batchId)
   }
 
   /** A RETRACTING epoch (the round-16 verdict's missing item 5 — a
@@ -168,10 +164,9 @@ object IncrementalDomain {
       .select(col("doc_id"), col("text"), col("lang"), col("fetch_seq"),
         col("registrable_domain"), col("subdomain"))
       .cut()
-    SnapshotTable.appendOnce(
-      mapPartial(extR).withColumn("m", -col("m"))
-        .withColumn("batch_id", lit(batchId)),
-      mapsDir, batchId): Unit
+    EpochLedger.land(
+      mapPartial(extR).withColumn("m", -col("m")),
+      mapsDir, batchId)
     val tombstones = extR
       .select(md5(col("text")).as("text_key"), col("fetch_seq"),
         col("registrable_domain").as("domain"), lit(1L).as("retract"))
@@ -183,10 +178,7 @@ object IncrementalDomain {
     val rescan = minPartial(DomainQueries.extractedDocs(prunedSurviving)
       .select(col("text"), col("fetch_seq"),
         col("registrable_domain")))
-    SnapshotTable.appendOnce(
-      tombstones.unionByName(rescan)
-        .withColumn("batch_id", lit(batchId)),
-      minsDir, batchId): Unit
+    EpochLedger.land(tombstones.unionByName(rescan), minsDir, batchId)
   }
 
   /** The standing `domain_stats` table off the two state tables —

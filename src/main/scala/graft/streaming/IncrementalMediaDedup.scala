@@ -1,35 +1,26 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.dedup.CollisionProbe
 import graft.mm.{Multimodal, MultimodalQueries}
-import graft.ops.Checkpoints.CheckpointOps
 
-/** Streaming MEDIA near-dedup: the fingerprint twin of
-  * [[IncrementalDedup]] (text bands) and [[IncrementalSemDedup]]
-  * (embedding buckets), closing the continuous-ingest loop for all
-  * three fingerprint modalities. Each micro-batch of media items is
-  * fingerprinted through the SAME kernels the batch queries use
+/** Streaming MEDIA near-dedup — the [[PairLoop]] over MediaItem-shaped
+  * rows of ONE modality (production runs one loop per modality against
+  * the modality-partitioned ingest, same as the batch layout). Items
+  * are fingerprinted through the SAME kernels the batch queries use
   * ([[Multimodal.imageAHashes]] / [[Multimodal.audioFingerprints]] /
-  * [[Multimodal.videoFingerprints]] — real JDK codecs), probed against
-  * the STANDING hash index
-  * ([[MultimodalQueries.incrementalMediaPairsBetween]] — batch band
-  * keys broadcast, standing side semi-narrowed to colliding buckets,
-  * replay-duplicate collapse, the family's cap, hamming verified only
-  * on collisions), and appended so later batches dedup against it.
-  * Same-batch duplicates pair via the batch-vs-itself pass.
+  * [[Multimodal.videoFingerprints]] — real JDK codecs) and probed on
+  * (band, key) with hamming verified on collisions only
+  * ([[MultimodalQueries.mediaProbe]]).
   *
-  * The index stores (item_id, bands) — 4 longs per item, NOT the
-  * payload: decode happens once per item at ingest, and only band
-  * keys ever cross the wire afterwards, the same
-  * payloads-never-shuffle property as the batch media pipeline. All
-  * appends are EFFECTIVELY-ONCE (the sibling loops' contract): rows
-  * are stamped with the epoch's batch_id and land via dynamic
-  * partition overwrite on it, so a replayed epoch rewrites its own
-  * partitions; the probe-side collapse remains as defense in depth.
-  * At 100 TB the index is a table bucketed on the band key and the
-  * probe reads matching buckets only.
+  * The index stores EXPLODED band rows ([[MultimodalQueries.mediaBandRows]]
+  * — (item_id, bands, band, key)), NOT the payload: decode happens once
+  * per item at ingest, and only band keys ever cross the wire
+  * afterwards, the same payloads-never-shuffle property as the batch
+  * media pipeline. With the band key a stored column, a
+  * [[IncrementalDedup.BucketedIndex]] on `key` feeds the probe with
+  * zero Exchange.
   */
 object IncrementalMediaDedup {
 
@@ -41,98 +32,57 @@ object IncrementalMediaDedup {
     * round-9 streaming-image bug: a fixed nBands=4 compared only the
     * top half of the 64-bit aHash, admitting false pairs the batch
     * `mm_image_dedup` contract rejects). */
-  private def fingerprints(
-      items: Dataset[Multimodal.MediaItem],
-      modality: String): (DataFrame, Int) = modality match {
-    case "image" => (Multimodal.imageAHashes(items).toDF(), 8)
-    case "audio" => (Multimodal.audioFingerprints(items).toDF(), 4)
-    case "video" => (Multimodal.videoFingerprints(items).toDF(), 4)
-    case m => throw new IllegalArgumentException(s"unknown modality $m")
+  private final class Loop(modality: String) extends PairLoop("media") {
+    private val (kernel, nBands): (Dataset[Multimodal.MediaItem] => DataFrame, Int) =
+      modality match {
+        case "image" => (Multimodal.imageAHashes(_).toDF(), 8)
+        case "audio" => (Multimodal.audioFingerprints(_).toDF(), 4)
+        case "video" => (Multimodal.videoFingerprints(_).toDF(), 4)
+        case m => throw new IllegalArgumentException(s"unknown modality $m")
+      }
+    protected def fingerprint(items: DataFrame): DataFrame = {
+      val spark = items.sparkSession
+      import spark.implicits._
+      kernel(items.as[Multimodal.MediaItem])
+    }
+    override protected def indexRows(hashes: DataFrame): DataFrame =
+      MultimodalQueries.mediaBandRows(hashes)
+    protected def probe: CollisionProbe =
+      MultimodalQueries.mediaProbe(nBands, maxHamming = 2)
   }
 
-  private final val MaxHamming = 2
+  /** Every modality's pair table has the same (new_item, corpus_item)
+    * columns, so the consumers read through any one loop. */
+  private val image = new Loop("image")
 
-  /** One micro-batch step over MediaItem-shaped rows: fingerprint,
-    * probe, emit pairs, grow the index. The index stores EXPLODED
-    * band rows ([[MultimodalQueries.mediaBandRows]] — (item_id, band,
-    * key, bands)): with the band key a stored column, a
-    * [[IncrementalDedup.BucketedIndex]] on `key` feeds the probe with
-    * zero Exchange, same as the text/embedding standing indexes. */
   private[graft] def processBatch(
       items: DataFrame, modality: String,
       indexDir: String, pairsDir: String, batchId: Long): Unit =
-    processBatch(items, modality, IncrementalDedup.SnapIndex(indexDir),
-      pairsDir, batchId, None)
+    new Loop(modality).processBatch(items, indexDir, pairsDir, batchId)
 
   private[graft] def processBatch(
       items: DataFrame, modality: String,
-      index: IncrementalDedup.BandIndex,
-      pairsDir: String, batchId: Long,
-      ownerId: Option[String] = None): Unit = {
-    val spark = items.sparkSession
-    // Guards before the empty-batch shortcut (see IncrementalDedup).
-    IncrementalDedup.requireEpochContinuity(index, spark, batchId, ownerId)
-    if (items.isEmpty) return
-    import spark.implicits._
-    // The CPU-heavy codec pass runs once: the hash frame feeds the
-    // intra pass, the standing probe, and the index append.
-    val (hashFrame, nBands) = fingerprints(items.as[Multimodal.MediaItem], modality)
-    val newHashes = hashFrame.cut(false)
-    val intra = MultimodalQueries
-      .incrementalMediaPairsBetween(
-        newHashes, MultimodalQueries.mediaBandRows(newHashes),
-        nBands, MaxHamming)
-      .filter(col("new_item") > col("corpus_item"))
-    val emitted =
-      if (index.exists(spark))
-        MultimodalQueries
-          .incrementalMediaPairsBetween(
-            newHashes,
-            IncrementalDedup.committedBefore(index.read(spark), batchId),
-            nBands, MaxHamming)
-          .unionByName(intra)
-      else intra
-    val pairs = emitted.cut(false)
-    if (!pairs.isEmpty)
-      IncrementalDedup.landPairs(pairs, pairsDir, batchId)
-    index.append(MultimodalQueries.mediaBandRows(newHashes), batchId)
-    IncrementalDedup.stampOwner(index, spark, ownerId)
-  }
+      index: IncrementalDedup.BandIndex, pairsDir: String, batchId: Long,
+      ownerId: Option[String] = None): Unit =
+    new Loop(modality).processBatch(items, index, pairsDir, batchId, ownerId)
 
-  /** Periodic components consumer over the loop's pair table — the
-    * streaming analog of the batch `mm_*_components` labels, read off
-    * the loop's own state ([[PairConsumers]]). */
-  def components(
-      spark: org.apache.spark.sql.SparkSession, pairsDir: String): DataFrame =
-    PairConsumers.componentsOf(spark, pairsDir, "new_item", "corpus_item", "item_id")
-
-  /** Periodic survivors consumer: min-item_id representative per
-    * cluster + unpaired corpus rows, with cluster sizes. */
-  def survivors(corpus: DataFrame, pairsDir: String): DataFrame =
-    PairConsumers.survivorsOf(corpus, pairsDir, "new_item", "corpus_item", "item_id")
-
-  /** Starts the loop over a stream of MediaItem-shaped rows of ONE
-    * modality (production runs one loop per modality against the
-    * modality-partitioned ingest, same as the batch layout). */
   def start(
       items: DataFrame, modality: String,
       indexDir: String, pairsDir: String, checkpointDir: String,
       trigger: Trigger = Streaming.HourlyTrigger): StreamingQuery =
-    start(items, modality, IncrementalDedup.SnapIndex(indexDir), pairsDir,
-      checkpointDir, trigger)
+    new Loop(modality).start(items, indexDir, pairsDir, checkpointDir, trigger)
 
   def start(
       items: DataFrame, modality: String,
       index: IncrementalDedup.BandIndex,
       pairsDir: String, checkpointDir: String,
       trigger: Trigger): StreamingQuery =
-    items.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch.toDF(), modality, index, pairsDir, batchId,
-          Some(checkpointDir))
-      }
-      .start()
+    new Loop(modality).start(items, index, pairsDir, checkpointDir, trigger)
+
+  def components(
+      spark: SparkSession, pairsDir: String): DataFrame =
+    image.components(spark, pairsDir)
+
+  def survivors(corpus: DataFrame, pairsDir: String): DataFrame =
+    image.survivors(corpus, pairsDir)
 }

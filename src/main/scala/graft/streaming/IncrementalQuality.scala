@@ -130,9 +130,7 @@ object IncrementalQuality {
     val db = QualityQueries
       .docBucketCounts(QualityQueries.labeledDocs(docs)).cut(false)
     val docRows = docRowsOf(db).cut(false)
-    SnapshotTable.appendOnce(
-      countPartial(db, docRows).withColumn("batch_id", lit(batchId)),
-      countsDir, batchId): Unit
+    EpochLedger.land(countPartial(db, docRows), countsDir, batchId)
     // ONE standing-model broadcast per epoch: the prior rides the
     // b = −1 pseudo-bucket (each doc gains one synthetic (b=−1, c=1)
     // row off the SHARED per-doc frame), so score = Σ c·w_fx over the
@@ -155,8 +153,7 @@ object IncrementalQuality {
       .select(col("doc_id"), col("n_tokens"), col("label"), col("split"),
         col("score_fx"))
       .withColumn("pred", (col("score_fx") > 0L).cast("long"))
-      .withColumn("batch_id", lit(batchId))
-    SnapshotTable.appendOnce(scored, scoresDir, batchId): Unit
+    EpochLedger.land(scored, scoresDir, batchId)
   }
 
   /** Every landed score row, from the pinned head snapshot. */

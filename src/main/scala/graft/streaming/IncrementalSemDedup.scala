@@ -1,105 +1,34 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.dedup.CollisionProbe
 import graft.sim.SimilarityQueries
-import graft.ops.Checkpoints.CheckpointOps
 
-/** Streaming SEMANTIC near-dedup: the embedding twin of
-  * [[IncrementalDedup]] — a continuous day-N+1 loop where each
-  * micro-batch of new vectors is sign-LSH-bucketed through the
-  * similarity family's machinery ([[SimilarityQueries.bucketRowsOf]]),
-  * probed against the STANDING bucket index
-  * ([[SimilarityQueries.incrementalSemPairsBetween]] — batch side
-  * broadcast, standing side semi-narrowed to colliding buckets, the
-  * family's degenerate-bucket cap intact, cosine scored only on the
-  * collision frame), and appended to that index so later batches dedup
-  * against it. Emitted (new_vec, corpus_vec, sim_e6) pairs append to
-  * their own table for a downstream components/survivors consumer —
-  * the same contract as the text loop's pair table.
+/** Streaming SEMANTIC near-dedup — the [[PairLoop]] over (vec_id,
+  * embedding) rows. Vectors are sign-LSH-bucketed into an OR-AMPLIFIED
+  * index ([[SimilarityQueries.multiBucketRowsOf]]): 4 sign-LSH tables
+  * over disjoint plane sets, table ordinal packed into the bucket id,
+  * so a pair colliding in ANY table is probed — the recall fix
+  * `embedding_near_dup_multi` measured (114→382 of 9221
+  * threshold-grade pairs vs one table) carried into the standing
+  * state. The probe ([[SimilarityQueries.semProbe]]) scores cosine on
+  * the collision frame only; emitted (new_vec, corpus_vec, sim_e6)
+  * pairs feed the components/survivors consumers.
   *
-  * Same-batch duplicates pair through the batch-vs-itself pass
-  * (orientation-filtered), closing the recall gap the text loop closed
-  * in round 9. Appends are EFFECTIVELY-ONCE (the text loop's
-  * contract): rows are stamped with the epoch's batch_id and land via
-  * dynamic partition overwrite on it, so a replayed epoch rewrites its
-  * own partitions instead of doubling them; the probe's
-  * pruned-slice collapse remains as defense in depth.
-  *
-  * The index is OR-AMPLIFIED ([[SimilarityQueries.multiBucketRowsOf]]):
-  * 4 sign-LSH tables over disjoint plane sets, table ordinal packed
-  * into the bucket id, so a pair colliding in ANY table is probed —
-  * the recall fix `embedding_near_dup_multi` measured (114→382 of 9221
-  * threshold-grade pairs vs one table) carried into the standing state.
-  *
-  * Scale posture: per batch the standing index is touched by ONE
-  * semi-join on bucket keys — at 100 TB the index is a table bucketed
-  * on `bucket` (the [[IncrementalDedup.BucketedIndex]] layout applies
-  * verbatim: HashPartitioning(bucket) satisfies the rank window and
-  * pair join, zero Exchange on the standing side; packed table
-  * ordinals are just disjoint ranges of that one key) — and the index
-  * is never re-bucketed, self-joined, or broadcast. Embedding payloads
-  * DO live in the index (the probe must score cosine), which is the
-  * real storage trade vs the text loop's key-only bands: 256 B/vector
-  * at 64-dim f32 per table row — 4× that bytes across the L=4 tables,
-  * the standard cost of an L-table LSH serving index.
+  * Embedding payloads DO live in the index (the probe must score
+  * cosine), which is the real storage trade vs the text loop's
+  * key-only bands: 256 B/vector at 64-dim f32 per table row — 4× that
+  * bytes across the L=4 tables, the standard cost of an L-table LSH
+  * serving index. A [[IncrementalDedup.BucketedIndex]] on `bucket`
+  * gives the zero-Exchange standing side (packed table ordinals are
+  * just disjoint ranges of that one key).
   */
-object IncrementalSemDedup {
+object IncrementalSemDedup extends PairLoop("semdedup") {
 
-  /** One micro-batch step over (vec_id, embedding) rows: probe, emit
-    * pairs, grow the index. Exposed for specs; [[start]] wires it
-    * behind a checkpoint. String-dir overloads drive the snapshot
-    * layout ([[IncrementalDedup.SnapIndex]], round 14). */
-  private[graft] def processBatch(
-      vecs: DataFrame, indexDir: String, pairsDir: String,
-      batchId: Long): Unit =
-    processBatch(
-      vecs, IncrementalDedup.SnapIndex(indexDir), pairsDir, batchId, None)
-
-  private[graft] def processBatch(
-      vecs: DataFrame, index: IncrementalDedup.BandIndex, pairsDir: String,
-      batchId: Long, ownerId: Option[String] = None): Unit = {
-    val spark = vecs.sparkSession
-    // Guards before the empty-batch shortcut (see IncrementalDedup).
-    IncrementalDedup.requireEpochContinuity(index, spark, batchId, ownerId)
-    requireMultiTableIndex(index, spark)
-    if (vecs.isEmpty) return
-    // Bucketing (the plane dot products) runs once: the batch frame is
-    // consumed by the intra pass, the standing probe, and the append.
-    // OR-AMPLIFIED index rows (4 disjoint-plane tables, table ordinal
-    // packed into the bucket id): the single-table index this loop
-    // shipped with caught ~1.2% of threshold-grade true pairs on the
-    // repo's own audit (embedding_recall_eval 114/9221); the 4-table
-    // scheme of embedding_near_dup_multi (382/9221) is what a standing
-    // production index must run. Probe/cap/append machinery is
-    // unchanged — tables are disjoint key ranges of one bucket column.
-    // MIGRATION (single-table -> multi-table index): a standing index
-    // written by the single-table layout stores RAW buckets, which
-    // only collide in the packed key's table-0 range — pre-upgrade
-    // vectors would get ~1-table recall forever. Like the media band
-    // layout change, the index is derived state: drop the index dir
-    // (keep the pairs table) and replay the corpus through one batch,
-    // or rebuild offline via multiBucketRowsOf over the stored
-    // (vec_id, embedding) rows written into a fresh dir.
-    val newRows = SimilarityQueries.multiBucketRowsOf(vecs).cut(false)
-    val intra = SimilarityQueries
-      .incrementalSemPairsBetween(newRows, newRows)
-      .filter(col("new_vec") > col("corpus_vec"))
-    val emitted =
-      if (index.exists(spark))
-        SimilarityQueries
-          .incrementalSemPairsBetween(
-            newRows,
-            IncrementalDedup.committedBefore(index.read(spark), batchId))
-          .unionByName(intra)
-      else intra
-    val pairs = emitted.cut(false)
-    if (!pairs.isEmpty)
-      IncrementalDedup.landPairs(pairs, pairsDir, batchId)
-    index.append(newRows, batchId)
-    IncrementalDedup.stampOwner(index, spark, ownerId)
-  }
+  protected def fingerprint(vecs: DataFrame): DataFrame =
+    SimilarityQueries.multiBucketRowsOf(vecs)
+  protected def probe: CollisionProbe = SimilarityQueries.semProbe()
 
   /** One verdict per index per driver lifetime: a resumed checkpoint
     * never passes through batch 0, so gating the check on the batch id
@@ -126,9 +55,8 @@ object IncrementalSemDedup {
     * the dir (keep the pairs table) and replay the corpus through one
     * batch, or rebuild offline via multiBucketRowsOf into a fresh
     * dir. */
-  private[streaming] def requireMultiTableIndex(
-      index: IncrementalDedup.BandIndex,
-      spark: org.apache.spark.sql.SparkSession): Unit =
+  override protected def precheck(
+      index: IncrementalDedup.BandIndex, spark: SparkSession): Unit =
     if (!multiTableChecked.contains(index) && index.exists(spark)) {
       val stored = index.read(spark)
       if (stored.columns.contains("bucket")) {
@@ -145,58 +73,4 @@ object IncrementalSemDedup {
       }
       multiTableChecked.add(index)
     }
-
-  /** Periodic COMPONENTS consumer over the loop's accumulated pair
-    * table — the step that closes streaming semantic dedup end-to-end
-    * (pairs → components), twin of `dedup_incremental_components`'s
-    * contract but reading the loop's own state: cosine near-dup edges
-    * appended by [[processBatch]] cluster through the shared
-    * propagation engine. Replayed duplicate pair rows (the
-    * at-least-once append) collapse in the edge distinct; cost is
-    * pair-graph-sized, never corpus-sized. */
-  def components(
-      spark: org.apache.spark.sql.SparkSession, pairsDir: String): DataFrame =
-    PairConsumers.componentsOf(spark, pairsDir, "new_vec", "corpus_vec", "vec_id")
-
-  /** Periodic SURVIVORS consumer: each cosine cluster keeps its
-    * min-vec_id representative, unpaired corpus rows survive, each
-    * survivor reports its cluster size — the same labels⋈sizes →
-    * one gated left-join-onto-corpus shape as `embedding_survivors`,
-    * run off the streaming pair table. `corpus` is any frame keyed by
-    * `vec_id` (the loop's index distinct'd, or the source table). */
-  def survivors(corpus: DataFrame, pairsDir: String,
-      retracted: Option[DataFrame] = None): DataFrame =
-    PairConsumers.survivorsOf(
-      corpus, pairsDir, "new_vec", "corpus_vec", "vec_id", retracted)
-
-  /** Starts the loop over a stream of (vec_id, embedding) rows; pass
-    * the BandIndex overload a
-    * `BucketedIndex(table, buckets, key = "bucket")` for the
-    * zero-Exchange standing side. */
-  def start(
-      vecs: DataFrame, indexDir: String, pairsDir: String,
-      checkpointDir: String,
-      trigger: Trigger): StreamingQuery =
-    start(vecs, IncrementalDedup.SnapIndex(indexDir), pairsDir,
-      checkpointDir, trigger)
-
-  def start(
-      vecs: DataFrame, indexDir: String, pairsDir: String,
-      checkpointDir: String): StreamingQuery =
-    start(vecs, IncrementalDedup.SnapIndex(indexDir), pairsDir,
-      checkpointDir, Streaming.HourlyTrigger)
-
-  def start(
-      vecs: DataFrame, index: IncrementalDedup.BandIndex, pairsDir: String,
-      checkpointDir: String,
-      trigger: Trigger = Streaming.HourlyTrigger): StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch.toDF(), index, pairsDir, batchId,
-          Some(checkpointDir))
-      }
-      .start()
 }

@@ -89,7 +89,7 @@ object IncrementalShards {
     // manifest's n_tokens column.
     val tails =
       if (SnapshotTable.currentSnapshot(spark, shardsDir).nonEmpty)
-        IncrementalDedup.committedBefore(
+        EpochLedger.committedBefore(
           SnapshotTable.read(spark, shardsDir), batchId)
           .groupBy(col("split"))
           .agg(sum(col("n_tokens")).as("base"))
@@ -114,9 +114,7 @@ object IncrementalShards {
       .select(col("doc_id"), col("source"), col("split"),
         col("n_tokens"), col("tk"), col("start_offset"),
         col("seq_first"), col("seq_last"))
-    SnapshotTable.appendOnce(
-      manifest.withColumn("batch_id", lit(batchId)),
-      shardsDir, batchId): Unit
+    EpochLedger.land(manifest, shardsDir, batchId)
   }
 
   /** The standing per-doc manifest — same shape as `training_shards`. */

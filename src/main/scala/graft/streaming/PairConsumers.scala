@@ -26,7 +26,7 @@ private[streaming] object PairConsumers {
     * (the write is gated on non-empty batches; a crashed first commit
     * leaves only a torn manifest) — the consumers treat that as the
     * empty graph instead of failing the maintenance job. Committed
-    * pair tables ([[IncrementalDedup.landPairs]]) read their PINNED
+    * pair tables ([[EpochLedger.land]]) read their PINNED
     * head manifest — a consumer racing an epoch append keeps the
     * snapshot it resolved. */
   def componentsOf(

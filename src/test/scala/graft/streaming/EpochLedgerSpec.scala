@@ -4,11 +4,13 @@ import graft.SparkSpec
 import graft.etl.SnapshotTable
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
+import graft.mm.Multimodal
 
 /** The shared epoch discipline ([[EpochLedger]]): admission refusals
   * and the populated non-snapshot dir refusal across every snapshot
-  * loop. The per-loop crash/replay specs use [[CrashBoundaries]]. */
-class EpochLedgerSpec extends SparkSpec {
+  * loop, and the pair loops' crash/replay. The other per-loop
+  * crash/replay specs use [[CrashBoundaries]] too. */
+class EpochLedgerSpec extends SparkSpec with CrashBoundaries {
 
   private def commit(dir: String, b: Long): Unit =
     SnapshotTable.appendOnce(
@@ -67,6 +69,35 @@ class EpochLedgerSpec extends SparkSpec {
       assert(e.getMessage.contains(planted), s"$name: ${e.getMessage}")
     }
   }
+
+  test("pair loops: a crash between the pairs and index commits heals " +
+      "bit-equal by replaying the epoch") {
+    import spark.implicits._
+    val text = "spark catalyst shuffles partition data across executors " * 8
+    val other = "completely different words about cooking pasta " * 3
+    val vec = (0 until 64).map(i => 0.1f + 0.01f * i)
+    val farVec = vec.zipWithIndex.map { case (x, i) => if (i % 2 == 0) x else -x }
+    def img(id: Long, seed: Long) = Multimodal.MediaItem(
+      id, "image", Multimodal.syntheticPng(seed, 16, 14),
+      Map("seed" -> seed.toString))
+    // Epoch 0 seeds the index; epoch 1 carries a duplicate of row 1, so
+    // it commits pairs (unpublishing a head needs one) before its index
+    // rows.
+    val cases: Seq[(String, (String, Long) => Unit)] = Seq(
+      "text" -> ((root, b) => IncrementalDedup.processBatch(
+        Seq(Seq((1L, text), (2L, other)), Seq((20L, text)))(b.toInt)
+          .toDF("doc_id", "text"), s"$root/index", s"$root/pairs", b)),
+      "semantic" -> ((root, b) => IncrementalSemDedup.processBatch(
+        Seq(Seq((1L, vec), (2L, farVec)), Seq((20L, vec.map(_ * 2f))))(b.toInt)
+          .toDF("vec_id", "embedding"), s"$root/index", s"$root/pairs", b)),
+      "media" -> ((root, b) => IncrementalMediaDedup.processBatch(
+        Seq(Seq(img(1L, 7L), img(2L, 99L)), Seq(img(20L, 7L)))(b.toInt).toDF(),
+        "image", s"$root/index", s"$root/pairs", b)))
+    // The pair loops run no admission, so a resume is not refused.
+    for ((name, epoch) <- cases)
+      crashAtEveryBoundary(name, Seq("pairs", "index"),
+        root => epoch(root, 0L), epoch, 1L, resumeRefused = false)
+  }
 }
 
 /** The crash/replay promise of a multi-ledger loop entry point, checked
@@ -86,13 +117,15 @@ trait CrashBoundaries { this: SparkSpec =>
   /** Land epochs up to `n` uninterrupted, then for each commit boundary
     * k of epoch `n` crash a copy of that state there — the newest
     * manifest of ledgers k+1.. dropped — and require that resuming at
-    * n+1 is refused and that replaying n leaves every ledger's read
-    * equal to the uninterrupted run. `ledgers` are in landing order,
-    * relative to the state root; manifests carry table-relative paths,
-    * so a copied root is the same committed state. */
+    * n+1 is refused (for loops that run [[EpochLedger.admit]]) and that
+    * replaying n leaves every ledger's read equal to the uninterrupted
+    * run. `ledgers` are in landing order, relative to the state root;
+    * manifests carry table-relative paths, so a copied root is the
+    * same committed state. */
   protected def crashAtEveryBoundary(
       name: String, ledgers: Seq[String], setup: String => Unit,
-      epoch: (String, Long) => Unit, n: Long): Unit = {
+      epoch: (String, Long) => Unit, n: Long,
+      resumeRefused: Boolean = true): Unit = {
     val ref = tmpDir(s"crash-$name")
     setup(ref)
     epoch(ref, n)
@@ -102,9 +135,11 @@ trait CrashBoundaries { this: SparkSpec =>
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(ref), new java.io.File(root))
       ledgers.drop(k).foreach(l => unpublishHead(s"$root/$l"))
-      val e = intercept[IllegalArgumentException](epoch(root, n + 1))
-      assert(e.getMessage.contains("epoch gap"),
-        s"$name, crash after ${ledgers.take(k)}: ${e.getMessage}")
+      if (resumeRefused) {
+        val e = intercept[IllegalArgumentException](epoch(root, n + 1))
+        assert(e.getMessage.contains("epoch gap"),
+          s"$name, crash after ${ledgers.take(k)}: ${e.getMessage}")
+      }
       epoch(root, n)
       assert(ledgers.map(l => ledgerRows(s"$root/$l")) == want,
         s"$name: replay after a crash after ${ledgers.take(k)} drifted")

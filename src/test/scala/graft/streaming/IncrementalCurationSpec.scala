@@ -286,11 +286,15 @@ class IncrementalCurationSpec extends SparkSpec with CrashBoundaries {
       .filter(col("vec_id") % 4 === 0)
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    val groups = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         jobs.add(e.jobId -> Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .getOrElse("")): Unit
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.put(e.jobId, _))
       }
     }
     sc.setJobDescription("outer cell")
@@ -306,17 +310,42 @@ class IncrementalCurationSpec extends SparkSpec with CrashBoundaries {
         s"$scratch/dver", 0L)
       assert(sc.getLocalProperty("spark.job.description") == "outer cell",
         "a curation epoch must hand the caller's label back")
+      // The pair loops, each in its own job group: a group's lowest job
+      // id is that loop's first job. (Reading the media table runs a
+      // job of its own, so it happens outside the groups.)
+      val images = graft.mm.Multimodal.mediaItems(spark, sf, "image").toDF()
+      val pairLoops: Seq[(String, () => Unit)] = Seq(
+        "dedup" -> (() => IncrementalDedup.processBatch(
+          docs.filter(col("doc_id") % 4 === 0).select("doc_id", "text"),
+          s"$scratch/dindex", s"$scratch/dpairs", 0L)),
+        "semdedup" -> (() => IncrementalSemDedup.processBatch(
+          vecs, s"$scratch/sindex", s"$scratch/spairs", 0L)),
+        "media" -> (() => IncrementalMediaDedup.processBatch(
+          images, "image", s"$scratch/mindex", s"$scratch/mpairs", 0L)))
+      for ((loop, run) <- pairLoops) {
+        sc.setJobGroup(loop, "outer cell")
+        run()
+        assert(sc.getLocalProperty("spark.job.description") == "outer cell",
+          s"a $loop epoch must hand the caller's label back")
+      }
       import scala.jdk.CollectionConverters._
       eventually(timeout(Span(30, Seconds))) {
         assert(jobs.asScala.exists(_._2.startsWith("curation epoch 0")))
+        assert(groups.values.asScala.toSet == pairLoops.map(_._1).toSet)
       }
       // Unlabelled jobs are the planes seeded above, still draining.
       val first = jobs.asScala.filter(_._2.nonEmpty).minBy(_._1)._2
       assert(first == "ann epoch 0: probe",
         s"the epoch's first job (the batch count) ran as '$first'")
+      for ((loop, _) <- pairLoops) {
+        val ids = groups.asScala.collect { case (id, `loop`) => id }
+        val firstOf = jobs.asScala.find(_._1 == ids.min).get._2
+        assert(firstOf.startsWith(s"$loop epoch 0: "),
+          s"the $loop epoch's first job ran as '$firstOf'")
+      }
     } finally {
       sc.removeSparkListener(listener)
-      sc.setJobDescription(null)
+      sc.clearJobGroup()
     }
   }
 

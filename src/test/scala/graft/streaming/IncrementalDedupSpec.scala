@@ -182,7 +182,7 @@ class IncrementalDedupSpec extends SparkSpec {
       // plan are NEW-BATCH-sized (the batch's bucket-key distinct and
       // the emitted-pair distinct), which is the point: per-batch cost
       // follows the batch, never the index.
-      val probe = graft.dedup.DedupQueries.incrementalPairsBetween(
+      val probe = graft.dedup.DedupQueries.bandProbe.pairs(
         graft.dedup.DedupQueries.bandsOfDocs(
           Seq((99L, base)).toDF("doc_id", "text")),
         spark.table(tbl))
@@ -358,6 +358,8 @@ class IncrementalDedupSpec extends SparkSpec {
       }
       assert(e.getMessage.contains("pre-epoch layout"))
       assert(e.getMessage.contains("batch_id"))
+      assert(graft.etl.SnapshotTable.currentSnapshot(spark, pairsDir).isEmpty,
+        "the refused epoch must not have committed its pairs")
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 }

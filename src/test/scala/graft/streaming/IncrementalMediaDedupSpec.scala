@@ -125,11 +125,12 @@ class IncrementalMediaDedupSpec extends SparkSpec {
       // The standing side is read through the bucket layout and
       // crosses NO shuffle: HashPartitioning(key) satisfies the
       // probe's (band, key)-clustered distinct, rank window and join.
-      val probe = graft.mm.MultimodalQueries.incrementalMediaPairsBetween(
-        graft.mm.Multimodal.imageAHashes(
-          Seq(item(99L, 7L)).toDS()).toDF(),
-        IncrementalDedup.committedBefore(spark.table(tbl), 3L),
-        nBands = 8, maxHamming = 2)
+      val probe = graft.mm.MultimodalQueries
+        .mediaProbe(nBands = 8, maxHamming = 2).pairs(
+          graft.mm.MultimodalQueries.mediaBandRows(
+            graft.mm.Multimodal.imageAHashes(
+              Seq(item(99L, 7L)).toDS()).toDF()),
+          EpochLedger.committedBefore(spark.table(tbl), 3L))
       val plan = probe.queryExecution.executedPlan
       assert(plan.toString.contains("Bucketed: true"),
         s"standing scan must use the bucket layout:\n$plan")

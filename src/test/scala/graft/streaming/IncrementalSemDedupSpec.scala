@@ -146,10 +146,10 @@ class IncrementalSemDedupSpec extends SparkSpec {
       // is read through the bucket layout and crosses NO shuffle —
       // HashPartitioning(bucket) satisfies the probe's distinct, rank
       // window and pair join (bucket is a subset of each clustering).
-      val probe = graft.sim.SimilarityQueries.incrementalSemPairsBetween(
+      val probe = graft.sim.SimilarityQueries.semProbe().pairs(
         graft.sim.SimilarityQueries.multiBucketRowsOf(
           Seq((99L, base)).toDF("vec_id", "embedding")),
-        IncrementalDedup.committedBefore(spark.table(tbl), 3L))
+        EpochLedger.committedBefore(spark.table(tbl), 3L))
       val plan = probe.queryExecution.executedPlan
       assert(plan.toString.contains("Bucketed: true"),
         s"standing scan must use the bucket layout:\n$plan")
